@@ -39,6 +39,24 @@ def _naive_main(domain: F.Column) -> F.Column:
 
 
 
+def isin_literals(key: str, values: list[str]) -> F.Column:
+    """``col(key) IN (values)`` over string literals, built as ONE SQL
+    expression.  ``Column.isin`` costs a JVM round trip per literal and
+    per list element it ships: ~0.17 s of driver time per filter at a
+    few hundred batch keys (local[4], 4-core VM).  The parsed IN list is
+    the same expression (the optimizer turns either into the same
+    InSet)."""
+    if not values:
+        return F.col(key).isin([])
+
+    def lit(v: str | None) -> str:
+        if v is None:
+            return "NULL"
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    name = "`" + key.replace("`", "``") + "`"
+    return F.expr(f"{name} IN ({', '.join(map(lit, values))})")
+
+
 def _bounded(dim: DataFrame, keys: DataFrame, key: str) -> DataFrame:
     """Prune an unbounded dimension snapshot to a batch-bounded key set
     (broadcast semi-join into the dim scan) so the subsequent broadcast
@@ -89,7 +107,7 @@ def enrich_batch(batch: DataFrame, whois: DataFrame, dns: DataFrame,
         if not small_batch:
             return d
         if lst is not None:
-            return d.filter(F.col(key).isin(lst))
+            return d.filter(isin_literals(key, lst))
         return _bounded(d, keys_df.withColumnRenamed(src_col, key), key)
 
     def bc(d: DataFrame) -> DataFrame:

@@ -79,5 +79,9 @@ def run_crawl(spark: SparkSession, tio: TableIO, inputs: CrawlInputs,
 
 
 def read_outputs(tio: TableIO) -> dict[str, DataFrame]:
-    return {name: tio.read(name, getattr(S, name.upper()))
+    """The four crawl tables as of the last committed iteration.  The run
+    meta is the commit point: a version a crashed iteration wrote before
+    its meta commit stays invisible here."""
+    version = tio.read_meta().get("iteration")
+    return {name: tio.read(name, getattr(S, name.upper()), version=version)
             for name in ("frontier", "seen", "nodes", "edges")}

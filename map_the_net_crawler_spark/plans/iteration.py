@@ -28,7 +28,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas as S
@@ -36,14 +36,14 @@ from ..config import CrawlConfig
 from ..functions.classify import classify_domain
 from ..functions.extract import extract_pages
 from ..functions.robots import make_robots_udf
-from ..operators.enrich import enrich_batch
+from ..operators.enrich import enrich_batch, isin_literals
 from ..operators.frontier import (apply_claim_gates, claim_batch,
                                   merge_discoveries)
 from ..operators.links import (build_relationships,
                                discoveries_from_relationships,
                                edges_from_relationships)
 from ..operators.seen import seen_counts_pruned
-from ..storage import TableIO
+from ..storage import TableIO, bucket_of
 
 
 @dataclass
@@ -79,6 +79,35 @@ def _empty(spark: SparkSession, schema) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
+def _key_set(key: str, cond: Column | None, nb: int) -> Column:
+    """Observation aggregate: the set of (k, b) = (key, its bucket id)
+    pairs over the rows where ``cond`` holds.  Null keys are left out —
+    they never match the equi-joins the keyed reads serve."""
+    keep = F.col(key).isNotNull()
+    if cond is not None:
+        keep = keep & cond
+    return F.collect_set(F.when(keep, F.struct(
+        F.col(key).alias("k"), bucket_of(key, nb).alias("b"))))
+
+
+def _join_all(futs, primary: BaseException | None = None) -> None:
+    """Wait for every future.  Raise ``primary`` if given, else the
+    first background failure; every other failure is attached to the
+    raised error as a note, so no root cause is masked or dropped."""
+    errors = []
+    for f in futs:
+        try:
+            f.result()
+        except BaseException as e:
+            errors.append(e)
+    if primary is None and errors:
+        primary = errors.pop(0)
+    if primary is not None:
+        for e in errors:
+            primary.add_note(f"concurrent commit also failed: {e!r}")
+        raise primary
+
+
 _TRACE = os.environ.get("MTN_TRACE", "") == "1"
 
 
@@ -104,7 +133,7 @@ def complete_data_domains(nodes: DataFrame, batch_domains: DataFrame,
     broadcast: the global complete set grows with the whole crawl and
     would eventually be unbroadcastable, while only batch keys can ever
     match the downstream anti-join (plan-pinned by tests/test_plans.py::
-    TestBoundedBroadcasts).  ``domain_list`` (a caller-collected batch
+    TestBoundedBroadcasts).  ``domain_list`` (a caller-observed batch
     key list) turns the prune into a literal in-filter pushed into the
     nodes scan — same rows, one broadcast subtree fewer."""
     flt = (nodes.filter(F.col("title").isNotNull()
@@ -112,10 +141,128 @@ def complete_data_domains(nodes: DataFrame, batch_domains: DataFrame,
                         & F.col("ip_address").isNotNull())
            .select("domain_name"))
     if domain_list is not None:
-        return flt.filter(F.col("domain_name").isin(domain_list))
+        return flt.filter(isin_literals("domain_name", domain_list))
     return flt.join(F.broadcast(batch_domains.select("domain_name")
                                 .distinct()),
                     "domain_name", "left_semi")
+
+
+def _prepare_sketch(spark: SparkSession, tio: TableIO, cfg: CrawlConfig,
+                    frontier: DataFrame, base: int, iteration: int,
+                    next_seq: int):
+    """The frontier membership sketch for this iteration: returns
+    (probe for merge_discoveries or None, commit function or None).
+    Provably-new discoveries skip the anti-join shuffle (SURVEY.md §4.4;
+    bit-exact by the no-false-negative contract —
+    tests/test_crawl_variants.py).  Needs only the BASE frontier, so
+    run_iteration starts it in its pool next to the gated write: an
+    O(frontier) rebuild runs under the gate and extract jobs instead of
+    on the critical path before the discovery merge.
+
+    INCREMENTAL MAINTENANCE (round 4): the sketch committed at
+    iteration v covers the frontier AT v, so the next iteration reuses
+    it directly and, after the merge, adds only the batch-bounded
+    new-URL set — O(batch) per iteration.  A full O(corpus) rebuild
+    happens only when the frontier outgrows the capacity the sketch
+    was sized for (built with 2× slack, so rebuilds amortize to one
+    per frontier doubling), or on mode change / first iteration.
+    Coverage invariant by induction: base sketch covers frontier@base,
+    frontier urls only ever grow by new_pending, which sketch_commit
+    inserts before the blob/shard-table commit."""
+    frontier_probe = None
+    sketch_commit = None
+    sk_meta = (tio.read_meta() or {}).get("sketch") or {}
+    if cfg.membership_sketch in ("bloom", "bloom_sharded"):
+        from ..sketches import (BloomSketch, ShardedBloomProbe,
+                                bloom_probe_udf, build_bloom,
+                                build_sharded_blooms, update_sharded_blooms,
+                                update_sharded_blooms_delta)
+        expected = max(1024, next_seq)
+        m, _k = BloomSketch.params_for(expected, cfg.bloom_fpp)
+        bitmap_bytes = (m + 7) // 8
+        # size-based physical-strategy pick: a driver-merged broadcast
+        # bitmap up to broadcast_sketch_max_bytes; above that (the north
+        # rule's 10^10-URL frontier => ~12 GB at 1% fpp) the sketch
+        # lives as a route-sharded blob TABLE probed via cogroup — no
+        # driver merge, no broadcast, one shard per task.
+        sharded = (cfg.membership_sketch == "bloom_sharded"
+                   or bitmap_bytes > cfg.broadcast_sketch_max_bytes)
+        reuse = (sk_meta.get("version") == base
+                 and sk_meta.get("cap", 0) >= next_seq
+                 and sk_meta.get("mode") == ("sharded" if sharded else "bloom"))
+        if sharded:
+            if reuse:
+                shards = tio.read("frontier_sketch_shards", version=base)
+                cap = int(sk_meta["cap"])
+            else:
+                cap = max(1024, 2 * next_seq)
+                shards = build_sharded_blooms(frontier, "url",
+                                              cfg.bloom_shard_parts,
+                                              cap, cfg.bloom_fpp)
+                # materialize the rebuild so downstream actions probe a
+                # cheap parquet scan rather than re-running the build
+                tio.write("frontier_sketch_build", shards, iteration)
+                shards = tio.read("frontier_sketch_build", version=iteration)
+            frontier_probe = ShardedBloomProbe(shards, cfg.bloom_shard_parts)
+
+            def sketch_commit(new_df, shards=shards, cap=cap, reuse=reuse):
+                if reuse:
+                    # O(touched routes) MERGE: only shard blobs owning a
+                    # new url are rewritten; the rest chain by manifest
+                    # reference (ADVICE r4 — was a full blob-table copy)
+                    delta = update_sharded_blooms_delta(
+                        shards, new_df, "url", cfg.bloom_shard_parts,
+                        cfg.bloom_fpp)
+                    tio.merge_state("frontier_sketch_shards", delta,
+                                    iteration, base)
+                else:
+                    upd = update_sharded_blooms(shards, new_df, "url",
+                                                cfg.bloom_shard_parts,
+                                                cfg.bloom_fpp)
+                    tio.write("frontier_sketch_shards", upd, iteration)
+                return {"mode": "sharded", "cap": cap, "version": iteration}
+        else:
+            if reuse:
+                sketch = BloomSketch.from_bytes(
+                    tio.read_blob("frontier_sketch", version=base))
+                cap = int(sk_meta["cap"])
+            else:
+                cap = max(1024, 2 * next_seq)
+                sketch = build_bloom(frontier, "url", cap, cfg.bloom_fpp)
+            frontier_probe = bloom_probe_udf(spark, sketch)
+
+            def sketch_commit(new_df, sketch=sketch, cap=cap):
+                import numpy as np
+                urls = sorted(r["url"] for r in new_df.select("url").collect())
+                if urls:
+                    sketch.add_batch(np.array(urls, dtype=object))
+                tio.write_blob("frontier_sketch", sketch.to_bytes(),
+                               iteration)
+                return {"mode": "bloom", "cap": cap, "version": iteration}
+    elif cfg.membership_sketch == "cuckoo":
+        from ..sketches import (PartitionedCuckoo, build_partitioned_cuckoo,
+                                cuckoo_probe_udf)
+        reuse = (sk_meta.get("version") == base
+                 and sk_meta.get("cap", 0) >= next_seq
+                 and sk_meta.get("mode") == "cuckoo")
+        if reuse:
+            pc = PartitionedCuckoo.from_bytes(
+                tio.read_blob("frontier_sketch", version=base))
+            cap = int(sk_meta["cap"])
+        else:
+            cap = max(64 * cfg.cuckoo_route_parts, 2 * next_seq)
+            pc = build_partitioned_cuckoo(
+                frontier, "url", cfg.cuckoo_route_parts,
+                max(64, cap // cfg.cuckoo_route_parts))
+        frontier_probe = cuckoo_probe_udf(spark, pc)
+
+        def sketch_commit(new_df, pc=pc, cap=cap):
+            urls = sorted(r["url"] for r in new_df.select("url").collect())
+            if urls:
+                pc.insert_batch(urls)
+            tio.write_blob("frontier_sketch", pc.to_bytes(), iteration)
+            return {"mode": "cuckoo", "cap": cap, "version": iteration}
+    return frontier_probe, sketch_commit
 
 
 def run_iteration(spark: SparkSession, tio: TableIO, inputs: CrawlInputs,
@@ -176,44 +323,51 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # domains), nodes for enrich/complete (claim domains + registrable
     # parents).  Bit-identical by construction — a key can only match
     # rows in its own bucket.  The path activates when the saved scan
-    # plausibly outweighs its tiny per-iteration key collects: either a
+    # plausibly outweighs its one extra write (the claim snapshot): a
     # scale-sized bucket count (>= 64, the Iceberg sizing where bucket
     # count ∝ corpus) or — at ANY bucket count — once the seen/nodes
     # manifests report >= cfg.prune_reads_min_rows rows (so a long
     # sandbox-bucketed run still stops scanning its whole history).
+    #
+    # The key→bucket maps these reads need are never collected by a
+    # job of their own: each rides a write the iteration makes anyway,
+    # as a collect_set Observation (claimed → seen/nodes gate keys,
+    # extract → link-target keys, rels + nodes_batch → touched node keys
+    # and candidate-url buckets).  An observed set may be a SUPERSET of
+    # the keys the consumer joins on, which read_keyed_state allows.
+    nb = tio.num_buckets
     prune_reads = tio._is_bucketed("frontier") and (
-        tio.num_buckets >= 64
+        nb >= 64
         or max(tio.state_rows("seen", base) or 0,
                tio.state_rows("nodes", base) or 0)
         >= cfg.prune_reads_min_rows)
     seen_gate_view, nodes_batch_view = seen, nodes
-    batch_domain_list: list[str] | None = None
     if prune_reads:
         from ..operators.enrich import _naive_main
         from ..psl import naive_main_domain
-        from ..storage import bucket_of
-        nb = tio.num_buckets
-        # snapshot the bare claim once so the bucket collect below and
-        # the gates share one claim execution
-        tio.write("claimed", claimed, iteration)
+        # snapshot the bare claim once so the gates re-read it instead
+        # of re-running the claim; the claim domains and their bucket
+        # ids ride the same write
+        obs_c = Observation()
+        tio.write("claimed", claimed.observe(
+            obs_c, F.collect_set(F.struct(
+                "domain_name",
+                bucket_of("domain_name", nb).alias("b"),
+                bucket_of(_naive_main(F.col("domain_name")), nb)
+                .alias("pb"))).alias("doms")), iteration)
         claimed = tio.read("claimed", version=iteration)
-        drows = (claimed.select("domain_name").distinct()
-                 .select("domain_name",
-                         bucket_of("domain_name", nb).alias("b"),
-                         bucket_of(_naive_main(F.col("domain_name")), nb)
-                         .alias("pb")).collect())
-        batch_domain_list = sorted({r["domain_name"] for r in drows})
+        drows = obs_c.get["doms"]
         # registrable parents for the WHOIS-inheritance lookup, derived
         # driver-side (Python twin of _naive_main, pinned by the
         # q_naive_main_domain oracle) paired with the parent bucket ids
-        # that rode the same single collect — key→bucket maps let the
-        # keyed read skip whole buckets, not just files
+        # observed on the same write — key→bucket maps let the keyed
+        # read skip whole buckets, not just files
         seen_kb = {r["domain_name"]: r["b"] for r in drows}
         nodes_kb = dict(seen_kb)
         for r in drows:
             nodes_kb[naive_main_domain(r["domain_name"])] = r["pb"]
         seen_gate_view, _seen_io = tio.read_keyed_state(
-            "seen", base, keys=batch_domain_list,
+            "seen", base, keys=sorted(seen_kb),
             key_buckets=seen_kb, schema=S.SEEN)
         nodes_batch_view, _nodes_io = tio.read_keyed_state(
             "nodes", base, keys=sorted(nodes_kb),
@@ -238,15 +392,20 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # unbroadcastable — see seen.seen_counts_pruned)
     scounts_claim = seen_counts_pruned(seen_gate_view, domains)
 
-    # claimed/skipped counts ride the gated WRITE as observed metrics —
-    # zero extra jobs (was a separate groupBy action per iteration)
-    from pyspark.sql import Observation
+    # claimed/skipped counts and the batch domain set ride the gated
+    # WRITE as observed metrics — zero extra jobs
     obs_g = Observation()
     gated = apply_claim_gates(claimed, scounts_claim, robots_flags, cfg) \
         .observe(obs_g,
                  F.count(F.lit(1)).alias("n"),
                  F.sum(F.when(F.col("gate_status") == "skipped", 1)
-                       .otherwise(0)).alias("n_skip"))
+                       .otherwise(0)).alias("n_skip"),
+                 F.collect_set("domain_name").alias("doms"))
+    # the membership sketch (an O(frontier) job when rebuilt) builds
+    # under the gate jobs, which leave most cores idle; merge_discoveries
+    # waits for it
+    sketch_fut = _pool.submit(_prepare_sketch, spark, tio, cfg, frontier,
+                              base, iteration, next_seq)
     tio.write("gated", gated, iteration)
     tmr.lap("gated_write")
     gated = tio.read("gated", version=iteration)
@@ -259,14 +418,10 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
                                claim_io)
     claimed = gated
     # batch key list for the literal-isin dim prunes (enrich / complete
-    # set): one tiny collect over the materialized ≤k-row gated parquet
-    # — in prune mode it already rode the bucket collect above.  Guarded
-    # by the in-list ceiling: a scale run with a huge claim batch falls
-    # back to the broadcast semi-join prunes.
-    if batch_domain_list is None:
-        batch_domain_list = sorted({
-            r["domain_name"] for r in
-            gated.select("domain_name").distinct().collect()})
+    # set), observed on the gated write.  Guarded by the in-list
+    # ceiling: a scale run with a huge claim batch falls back to the
+    # broadcast semi-join prunes.
+    batch_domain_list: list[str] | None = sorted(gm["doms"])
     if len(batch_domain_list) > cfg.enrich_inlist_max:
         batch_domain_list = None
 
@@ -297,7 +452,9 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # processed-domain and link counts ride the extract WRITE: each batch
     # domain yields exactly one metadata row (link_pos == -1), so n_meta
-    # == countDistinct(domain) with gate_status='process'
+    # == countDistinct(domain) with gate_status='process'.  In prune mode
+    # the surviving links' target domains and their seen buckets ride it
+    # too (a superset of the robots-allowed targets the gates look up).
     obs_e = Observation()
     from ..operators.links import link_survives
     # F1-F10 link survival fused into the extract snapshot: ONE regex
@@ -309,15 +466,21 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # same Column filter_links applies (shared definition + pinned by
     # tests), so the fused column cannot drift from the operator.
     _link_ok = link_survives()
+    extract_obs = [
+        F.sum(F.when(F.col("link_pos") == -1, 1).otherwise(0))
+        .alias("n_meta"),
+        F.sum(F.when(F.col("link_pos") >= 0, 1).otherwise(0))
+        .alias("n_links")]
+    if prune_reads:
+        extract_obs.append(_key_set(
+            "target_domain",
+            (F.col("link_pos") >= 0) & F.col("_link_ok"), nb)
+            .alias("tgt"))
     extracted = extract_pages(
         fetched.select("url", "domain_name", "html")
         .repartition(n_part, "url")) \
         .withColumn("_link_ok", _link_ok) \
-        .observe(obs_e,
-                 F.sum(F.when(F.col("link_pos") == -1, 1).otherwise(0))
-                 .alias("n_meta"),
-                 F.sum(F.when(F.col("link_pos") >= 0, 1).otherwise(0))
-                 .alias("n_links"))
+        .observe(obs_e, *extract_obs)
     tio.write("extract", extracted, iteration)
     tmr.lap("extract_write")
     extracted = tio.read("extract", version=iteration)
@@ -327,6 +490,64 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
 
     binfo = batch.select("domain_name", "batch_rank", "depth", "robots_ok",
                          F.col("seen_cnt").alias("_start_cnt"))
+
+    # ---- link pipeline (robots-gated, :938-941) ------------------------
+    # The rels and nodes_batch writes share nothing but the extract
+    # snapshot, so the rels write runs as a concurrent job UNDER the
+    # enrichment plan and the nodes_batch write (guide §2.6 overlap
+    # independent jobs; VERDICT r5 'Next round' #1a: extend the 2-thread
+    # pool to the scratch-write DAG).  The longer rels chain starts
+    # first and the enrich plan is built while it runs.  _pool is owned
+    # (and always joined) by the run_iteration wrapper.
+    #
+    # slim projection: dragging the full extract schema through the
+    # filter measured 5-9× slower than these 13 cols.  The survival
+    # filter itself is the precomputed _link_ok column — the regexes ran
+    # once, inside the extract write; every downstream reference
+    # (build_relationships uses the subtree ~4×) is a cheap column scan
+    # of the materialized extract parquet, so no valid_links snapshot is
+    # needed at any batch size (VERDICT r5 'Next round' #1b: collapse
+    # the extract/valid_links scratch writes).
+    valid = (extracted.filter((F.col("link_pos") >= 0)
+                              & F.col("_link_ok"))
+             .select("domain_name", "link_pos", "href", "link_text",
+                     "href_scheme", "href_netloc", "href_path",
+                     "n_query_params", "param_names", "target_domain",
+                     "clean_url")
+             .join(F.broadcast(binfo), "domain_name", "inner")
+             .filter(F.col("robots_ok"))
+             .withColumnRenamed("batch_rank", "claim_rank")
+             .withColumnRenamed("depth", "src_depth")
+             .drop("robots_ok", "_start_cnt"))
+    tmr.lap("valid_view")
+    # history counts for the quota gates on TARGET domains, pruned to
+    # this iteration's discovered-target set (bounded by batch × caps —
+    # the discovery/enqueue gates join on exactly these keys).  On the
+    # at-scale read path the seen SCAN side is additionally
+    # bucket-pruned to the targets' own buckets (observed on the extract
+    # write).
+    seen_tgt_view = seen
+    if prune_reads:
+        tgt_kb = {r["k"]: r["b"] for r in em["tgt"]}
+        seen_tgt_view, _tgt_io = tio.read_keyed_state(
+            "seen", base, keys=sorted(tgt_kb), key_buckets=tgt_kb,
+            schema=S.SEEN)
+    scounts_targets = seen_counts_pruned(
+        seen_tgt_view,
+        valid.select(F.col("target_domain").alias("domain_name")))
+    rels = build_relationships(valid, inputs.redirects, scounts_targets,
+                               processed_domains, cfg)
+    # the rels write carries what the pruned reads below need: the
+    # candidate urls' frontier buckets and the touched node keys (link
+    # targets and redirect finals; the nodes_batch write adds its own)
+    obs_r = Observation()
+    if prune_reads:
+        rels = rels.observe(
+            obs_r,
+            F.collect_set(bucket_of("clean_url", nb)).alias("cand"),
+            _key_set("target_domain", None, nb).alias("tgt"),
+            _key_set("redirect_final_domain", None, nb).alias("redir"))
+    f_rels = _pool.submit(tio.write, "rels", rels, iteration)
 
     # ---- node rows (U1-U4, C6-C8, S9) ----------------------------------
     meta = (extracted.filter(F.col("link_pos") == -1)
@@ -381,59 +602,13 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
                         "ssl_valid", "ssl_expiry", "country", "ip_address",
                         "latitude", "longitude", "category", "tags",
                         F.lit(iteration).alias("updated_iteration")))
-    # materialized below (in parallel with the rels write)
 
-    # ---- link pipeline (robots-gated, :938-941) ------------------------
-    # The nodes_batch write only needs the extract metadata rows + the
-    # enrichment dims — nothing from the link pipeline — so it runs as a
-    # concurrent job UNDER the whole rels chain (guide §2.6 overlap
-    # independent jobs; VERDICT r5 'Next round' #1a: extend the 2-thread
-    # pool to the scratch-write DAG).  _pool is owned (and always
-    # joined) by the run_iteration wrapper.
-    f_nodes_batch = _pool.submit(tio.write, "nodes_batch", full_updates,
-                                 iteration)
-    # slim projection: dragging the full extract schema through the
-    # filter measured 5-9× slower than these 13 cols.  The survival
-    # filter itself is the precomputed _link_ok column — the regexes ran
-    # once, inside the extract write; every downstream reference
-    # (build_relationships uses the subtree ~4×) is a cheap column scan
-    # of the materialized extract parquet, so no valid_links snapshot is
-    # needed at any batch size (VERDICT r5 'Next round' #1b: collapse
-    # the extract/valid_links scratch writes).
-    valid = (extracted.filter((F.col("link_pos") >= 0)
-                              & F.col("_link_ok"))
-             .select("domain_name", "link_pos", "href", "link_text",
-                     "href_scheme", "href_netloc", "href_path",
-                     "n_query_params", "param_names", "target_domain",
-                     "clean_url")
-             .join(F.broadcast(binfo), "domain_name", "inner")
-             .filter(F.col("robots_ok"))
-             .withColumnRenamed("batch_rank", "claim_rank")
-             .withColumnRenamed("depth", "src_depth")
-             .drop("robots_ok", "_start_cnt"))
-    tmr.lap("valid_view")
-    # history counts for the quota gates on TARGET domains, pruned to
-    # this iteration's discovered-target set (bounded by batch × caps —
-    # the discovery/enqueue gates join on exactly these keys).  On the
-    # at-scale read path the seen SCAN side is additionally
-    # bucket-pruned to the targets' own buckets.
-    seen_tgt_view = seen
+    obs_nb = Observation()
     if prune_reads:
-        from ..storage import bucket_of
-        trows = (valid.select(F.col("target_domain").alias("k"),
-                              bucket_of("target_domain", tio.num_buckets)
-                              .alias("b"))
-                 .distinct().collect())
-        seen_tgt_view, _tgt_io = tio.read_keyed_state(
-            "seen", base, keys=sorted({r["k"] for r in trows}),
-            key_buckets={r["k"]: r["b"] for r in trows}, schema=S.SEEN)
-    scounts_targets = seen_counts_pruned(
-        seen_tgt_view,
-        valid.select(F.col("target_domain").alias("domain_name")))
-    rels = build_relationships(valid, inputs.redirects, scounts_targets,
-                               processed_domains, cfg)
-    tio.write("rels", rels, iteration)
-    f_nodes_batch.result()
+        full_updates = full_updates.observe(
+            obs_nb, _key_set("domain_name", None, nb).alias("keys"))
+    tio.write("nodes_batch", full_updates, iteration)
+    f_rels.result()
     tmr.lap("nodes_batch+rels_write")
     full_updates = tio.read("nodes_batch", version=iteration)
     rels = tio.read("rels", version=iteration)
@@ -441,42 +616,18 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     edges_batch = edges_from_relationships(rels, iteration)
     discoveries = discoveries_from_relationships(rels)
 
-    # ---- at-scale pruned read views (prune_reads only): ONE tiny Spark
-    # action over the already-materialized batch-sized rels/nodes_batch
-    # parquets collects the touched-domain and candidate-url bucket
-    # sets, then the minimal-row nodes lookup and the discovery
-    # anti-join's frontier key side open only those buckets.
-    # (State-table COMMITS no longer need touched buckets at all — the
-    # merge-on-read delta log in TableIO.merge_state writes O(batch)
-    # partitions and derives touched buckets itself at compaction.)
+    # ---- at-scale pruned read views (prune_reads only): the
+    # touched-domain and candidate-url bucket sets observed on the rels
+    # and nodes_batch writes let the minimal-row nodes lookup and the
+    # discovery anti-join's frontier key side open only those buckets.
+    # (State-table COMMITS need no touched buckets from the plan — each
+    # merge_state observes its delta's bucket set on its own write.)
     nodes_touch_view, frontier_keys_view = nodes, frontier
     if prune_reads:
-        from functools import reduce
-
-        from ..storage import bucket_of
-        nb = tio.num_buckets
-        node_doms = (full_updates.select("domain_name")
-                     .unionByName(rels.select(F.col("target_domain")
-                                              .alias("domain_name")))
-                     .unionByName(rels.filter(F.col("redirect_final_domain")
-                                              .isNotNull())
-                                  .select(F.col("redirect_final_domain")
-                                          .alias("domain_name"))))
-        key_sets = [
-            rels.select(F.lit("cand").alias("t"), F.lit(None).alias("k"),
-                        bucket_of("clean_url", nb).alias("b")),
-            node_doms.select(F.lit("nodes").alias("t"),
-                             F.col("domain_name").alias("k"),
-                             bucket_of("domain_name", nb).alias("b")),
-        ]
-        buckets: dict[str, set[int]] = {"cand": set(), "nodes": set()}
-        node_kb: dict[str, int] = {}
-        for r in reduce(DataFrame.unionByName, key_sets).distinct().collect():
-            buckets.setdefault(r["t"], set()).add(r["b"])
-            if r["t"] == "nodes":
-                node_kb[r["k"]] = r["b"]
-        # nodes: bucket prune + file-grain key-range skip (same single
-        # collect also carries the touched key→bucket map); frontier
+        rm, nbm = obs_r.get, obs_nb.get
+        node_kb = {r["k"]: r["b"]
+                   for r in [*nbm["keys"], *rm["tgt"], *rm["redir"]]}
+        # nodes: bucket prune + file-grain key-range skip; frontier
         # keys: bucket prune only — frontier files are sorted by claim
         # stats (status/priority/seq), so url ranges are unselective
         nodes_touch_view, _touch_io = tio.read_keyed_state(
@@ -484,7 +635,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
             key_buckets=node_kb, schema=S.NODES)
         frontier_keys_view = tio.read_state("frontier", version=base,
                                             schema=S.FRONTIER,
-                                            buckets=sorted(buckets["cand"]))
+                                            buckets=sorted(rm["cand"]))
     tmr.lap("touched_buckets")
 
     # ---- minimal node rows for targets + redirect finals (J2) ----------
@@ -588,132 +739,23 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # UNPINNED latest-version read (read_outputs) taken between a
     # mid-iteration crash and the resume can see version-N
     # seen/nodes/edges next to the version-N-1 frontier — a window the
-    # old end-of-iteration fan-out also had, just narrower.
-    # delta-size hints: UPPER BOUNDS from counts the iteration already
-    # observed, so merge_state skips its sizing action (hints only steer
-    # the compaction bookkeeping — overestimates are safe, and a 0 hint
-    # is only passed when the delta is provably empty)
+    # old end-of-iteration fan-out also had, just narrower; read_outputs
+    # reads at the meta version, so it never sees that mixed state.
+    # Each merge observes its own delta's size and bucket set on its
+    # delta write — no caller estimate, no sizing job.
     commit_futs = [
-        _pool.submit(tio.merge_state, "seen", seen_delta, iteration, base,
-                     None, n_claimed),
-        _pool.submit(tio.merge_state, "nodes", nodes_delta, iteration, base,
-                     None, n_proc + 2 * n_links),
-        _pool.submit(tio.merge_state, "edges", edges_delta, iteration, base,
-                     None, 2 * n_links),
+        _pool.submit(tio.merge_state, "seen", seen_delta, iteration, base),
+        _pool.submit(tio.merge_state, "nodes", nodes_delta, iteration,
+                     base),
+        _pool.submit(tio.merge_state, "edges", edges_delta, iteration,
+                     base),
         _pool.submit(tio.append_partition, "metrics", metrics_new,
                      iteration),
     ]
 
     # ---- frontier update ------------------------------------------------
-    # membership sketch over the frontier url set: provably-new
-    # discoveries skip the anti-join shuffle (SURVEY.md §4.4; bit-exact
-    # by the no-false-negative contract — tests/test_crawl_variants.py).
-    #
-    # INCREMENTAL MAINTENANCE (round 4): the sketch committed at
-    # iteration v covers the frontier AT v, so the next iteration reuses
-    # it directly and, after the merge, adds only the batch-bounded
-    # new-URL set — O(batch) per iteration.  A full O(corpus) rebuild
-    # happens only when the frontier outgrows the capacity the sketch
-    # was sized for (built with 2× slack, so rebuilds amortize to one
-    # per frontier doubling), or on mode change / first iteration.
-    # Coverage invariant by induction: base sketch covers frontier@base,
-    # frontier urls only ever grow by new_pending, which sketch_commit
-    # inserts before the blob/shard-table commit.
-    frontier_probe = None
-    sketch_commit = None
+    frontier_probe, sketch_commit = sketch_fut.result()
     new_sk_meta = None
-    sk_meta = (tio.read_meta() or {}).get("sketch") or {}
-    if cfg.membership_sketch in ("bloom", "bloom_sharded"):
-        from ..sketches import (BloomSketch, ShardedBloomProbe,
-                                bloom_probe_udf, build_bloom,
-                                build_sharded_blooms, update_sharded_blooms,
-                                update_sharded_blooms_delta)
-        expected = max(1024, next_seq)
-        m, _k = BloomSketch.params_for(expected, cfg.bloom_fpp)
-        bitmap_bytes = (m + 7) // 8
-        # size-based physical-strategy pick: a driver-merged broadcast
-        # bitmap up to broadcast_sketch_max_bytes; above that (the north
-        # rule's 10^10-URL frontier => ~12 GB at 1% fpp) the sketch
-        # lives as a route-sharded blob TABLE probed via cogroup — no
-        # driver merge, no broadcast, one shard per task.
-        sharded = (cfg.membership_sketch == "bloom_sharded"
-                   or bitmap_bytes > cfg.broadcast_sketch_max_bytes)
-        reuse = (sk_meta.get("version") == base
-                 and sk_meta.get("cap", 0) >= next_seq
-                 and sk_meta.get("mode") == ("sharded" if sharded else "bloom"))
-        if sharded:
-            if reuse:
-                shards = tio.read("frontier_sketch_shards", version=base)
-                cap = int(sk_meta["cap"])
-            else:
-                cap = max(1024, 2 * next_seq)
-                shards = build_sharded_blooms(frontier, "url",
-                                              cfg.bloom_shard_parts,
-                                              cap, cfg.bloom_fpp)
-                # materialize the rebuild so downstream actions probe a
-                # cheap parquet scan rather than re-running the build
-                tio.write("frontier_sketch_build", shards, iteration)
-                shards = tio.read("frontier_sketch_build", version=iteration)
-            frontier_probe = ShardedBloomProbe(shards, cfg.bloom_shard_parts)
-
-            def sketch_commit(new_df, shards=shards, cap=cap, reuse=reuse):
-                if reuse:
-                    # O(touched routes) MERGE: only shard blobs owning a
-                    # new url are rewritten; the rest chain by manifest
-                    # reference (ADVICE r4 — was a full blob-table copy)
-                    delta = update_sharded_blooms_delta(
-                        shards, new_df, "url", cfg.bloom_shard_parts,
-                        cfg.bloom_fpp)
-                    tio.merge_state("frontier_sketch_shards", delta,
-                                    iteration, base, None,
-                                    cfg.bloom_shard_parts)
-                else:
-                    upd = update_sharded_blooms(shards, new_df, "url",
-                                                cfg.bloom_shard_parts,
-                                                cfg.bloom_fpp)
-                    tio.write("frontier_sketch_shards", upd, iteration)
-                return {"mode": "sharded", "cap": cap, "version": iteration}
-        else:
-            if reuse:
-                sketch = BloomSketch.from_bytes(
-                    tio.read_blob("frontier_sketch", version=base))
-                cap = int(sk_meta["cap"])
-            else:
-                cap = max(1024, 2 * next_seq)
-                sketch = build_bloom(frontier, "url", cap, cfg.bloom_fpp)
-            frontier_probe = bloom_probe_udf(spark, sketch)
-
-            def sketch_commit(new_df, sketch=sketch, cap=cap):
-                import numpy as np
-                urls = sorted(r["url"] for r in new_df.select("url").collect())
-                if urls:
-                    sketch.add_batch(np.array(urls, dtype=object))
-                tio.write_blob("frontier_sketch", sketch.to_bytes(),
-                               iteration)
-                return {"mode": "bloom", "cap": cap, "version": iteration}
-    elif cfg.membership_sketch == "cuckoo":
-        from ..sketches import (PartitionedCuckoo, build_partitioned_cuckoo,
-                                cuckoo_probe_udf)
-        reuse = (sk_meta.get("version") == base
-                 and sk_meta.get("cap", 0) >= next_seq
-                 and sk_meta.get("mode") == "cuckoo")
-        if reuse:
-            pc = PartitionedCuckoo.from_bytes(
-                tio.read_blob("frontier_sketch", version=base))
-            cap = int(sk_meta["cap"])
-        else:
-            cap = max(64 * cfg.cuckoo_route_parts, 2 * next_seq)
-            pc = build_partitioned_cuckoo(
-                frontier, "url", cfg.cuckoo_route_parts,
-                max(64, cap // cfg.cuckoo_route_parts))
-        frontier_probe = cuckoo_probe_udf(spark, pc)
-
-        def sketch_commit(new_df, pc=pc, cap=cap):
-            urls = sorted(r["url"] for r in new_df.select("url").collect())
-            if urls:
-                pc.insert_batch(urls)
-            tio.write_blob("frontier_sketch", pc.to_bytes(), iteration)
-            return {"mode": "cuckoo", "cap": cap, "version": iteration}
     tmr.lap("sketch_build")
     # the new-row count rides the new_pending WRITE as an observed
     # metric (was a separate count job over the re-read parquet)
@@ -775,13 +817,14 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # below is the single commit point.  Bucketed layout: each merge
     # appends ONE O(batch) delta partition to the merge-on-read log
     # (folded into touched buckets when the log grows) — per-iteration
-    # I/O scales with the batch, not the corpus.
+    # I/O scales with the batch, not the corpus.  A frontier-merge
+    # failure is the error that propagates; the early commits are still
+    # joined, and their failures ride along as notes.
     try:
-        tio.merge_state("frontier", frontier_delta, iteration, base,
-                        None, n_claimed + n_new)
-    finally:
-        for f in commit_futs:
-            f.result()
+        tio.merge_state("frontier", frontier_delta, iteration, base)
+    except BaseException as e:
+        _join_all(commit_futs, e)
+    _join_all(commit_futs)
     tmr.lap("tables_commit")
     run_meta = {"iteration": iteration, "next_seq": next_seq + n_new}
     if new_sk_meta is not None:

@@ -7,6 +7,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 48g: local mode runs
+    every task in the driver JVM, but a heap larger than the machine
+    gets the process OOM-killed instead of spilling."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, phys // 2 ** 21))}m"
+
+
 def get_spark(app_name: str = "map_the_net_crawler_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -42,9 +53,17 @@ def get_spark(app_name: str = "map_the_net_crawler_spark",
         # 10-row batch cardinality; interpreted eval is regex-bound anyway
         .config("spark.sql.codegen.wholeStage", str(codegen).lower())
         .config("spark.ui.enabled", "false")
+        # TableIO resolves every path it reads from its own manifests, so
+        # Spark's file listing stays on the driver at any path count: the
+        # default threshold (32 paths) turned every bucketed read into a
+        # distributed listing job (~0.5 s of fixed cost each)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2 ** 31 - 1))
         # local mode = driver-only JVM: size the heap for cores × task
         # buffers (8g with 32 concurrent tasks GC-thrashes on wide rows)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY",
+                               _default_driver_memory()))
         .config(map=dict(extra_conf or {}))
         .getOrCreate()
     )

@@ -18,6 +18,12 @@ crawl loop needs:
   so the logical plan never grows across the feedback loop
   (SURVEY.md §7.3 hard part 3).
 
+Reads never start a Spark job.  Every path a read opens comes from
+TableIO's own manifests and directory names, every read passes its
+schema (state tables: ``schemas``; snapshot tables: the ``_schema.json``
+each write records next to its data), and the session keeps Spark's
+file listing on the driver (``session.get_spark``).
+
 Two physical layouts (VERDICT r3 item 1 — the O(corpus) rewrite fix):
 
 - **snapshot** (rounds ≤3): each version is a complete rewrite of the
@@ -33,18 +39,22 @@ Two physical layouts (VERDICT r3 item 1 — the O(corpus) rewrite fix):
     ``<table>/delta_v<version>/`` — strictly O(batch) bytes, no base
     read, no bucket rewrite — and records it in the manifest
     ``<table>/_ptr/v<version>.json`` (bucket→version map + pending
-    delta list);
+    delta list).  The delta's row count and bucket set are observed on
+    that same write (one ``Observation``) and recorded with it, so a
+    commit is sized by what it wrote, never by a caller's estimate or a
+    separate count;
   * reads overlay the deltas with upsert semantics WITHOUT a
     corpus-sized shuffle: newest-version-wins is resolved over the
     (small) concatenated deltas only, then
     ``base ANTI-JOIN broadcast(delta keys) UNION resolved`` — the base
     scan stays a plain columnar scan with a broadcast filter (delta
     keys are bounded by batch × compact_every);
-  * every ``compact_every`` commits the deltas are folded into their
-    touched buckets (copy-on-write of exactly those buckets, carried
-    by manifest reference otherwise) and the delta list resets — the
-    O(touched-buckets) rewrite amortizes to 1/compact_every per
-    iteration.
+  * once the log holds ``compact_every`` deltas, or its recorded rows
+    reach a share of the base, the deltas are folded into the union of
+    their recorded bucket sets (copy-on-write of exactly those buckets,
+    carried by manifest reference otherwise) and the delta list resets
+    — the O(touched-buckets) rewrite amortizes to 1/compact_every per
+    iteration and needs no job to find its buckets.
 
   Reads at any version resolve the greatest manifest ≤ that version;
   bucket-pruned reads (a bounded key set) open only the matching
@@ -65,7 +75,7 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,6 +119,8 @@ STATE_TABLES: dict[str, dict] = {
                                "merge_keys": ["route"]},
 }
 APPEND_TABLES = {"metrics"}
+# the schema a snapshot write recorded, inside its version dir
+_SCHEMA_FILE = "_schema.json"
 
 
 def _parquet_rows(path: str) -> int:
@@ -270,8 +282,7 @@ class TableIO:
 
     # ---- snapshot layout (scratch tables + legacy state layout) ----------
 
-    def write(self, name: str, df: DataFrame, version: int,
-              partition_by: list[str] | None = None) -> None:
+    def write(self, name: str, df: DataFrame, version: int) -> None:
         """Write ``df`` as the table's content at ``version``.
 
         Dispatch: state tables under the bucketed layout get a FULL
@@ -285,19 +296,21 @@ class TableIO:
         elif self.layout == "bucketed" and name in STATE_TABLES:
             self._write_bucketed(name, df, version, full=True)
         else:
-            self._write_snapshot(name, df, version, partition_by)
+            self._write_snapshot(name, df, version)
         _trace(f"write {name} v{version}", t0)
 
-    def _write_snapshot(self, name: str, df: DataFrame, version: int,
-                        partition_by: list[str] | None = None) -> None:
+    def _write_snapshot(self, name: str, df: DataFrame,
+                        version: int) -> None:
+        """Plain versioned snapshot.  The written schema lands next to
+        the data (``_schema.json``; Spark skips ``_``-prefixed files) so
+        re-reads pass it instead of running a schema-inference job."""
         path = self.snapshot_path(name, version)
         tmp = path + ".tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
+        with open(os.path.join(tmp, _SCHEMA_FILE), "w") as f:
+            f.write(df.schema.json())
         if os.path.exists(path):
             shutil.rmtree(path)
         os.rename(tmp, path)
@@ -309,7 +322,8 @@ class TableIO:
     def read(self, name: str, schema: T.StructType | None = None,
              version: int | None = None) -> DataFrame:
         """Read the table as of ``version`` (None = latest committed).
-        Auto-detects the on-disk layout."""
+        Auto-detects the on-disk layout.  Without ``schema``, a snapshot
+        is read with the schema its write recorded."""
         if self._is_bucketed(name):
             return self._read_bucketed(name, schema, version)
         if self._is_append(name):
@@ -338,10 +352,17 @@ class TableIO:
             if schema is None:
                 raise FileNotFoundError(f"table {name} has no snapshot and no schema")
             return self.spark.createDataFrame([], schema)
+        path = self.snapshot_path(name, v)
+        if schema is None:
+            try:
+                with open(os.path.join(path, _SCHEMA_FILE)) as f:
+                    schema = T.StructType.fromJson(json.load(f))
+            except OSError:
+                pass    # written before schemas were recorded: infer
         r = self.spark.read
         if schema is not None:  # pin column order across layouts
             r = r.schema(schema)
-        return r.parquet(self.snapshot_path(name, v))
+        return r.parquet(path)
 
     def _snapshot_version_le(self, name: str, version: int) -> int | None:
         d = self._table_dir(name)
@@ -404,6 +425,7 @@ class TableIO:
     def _load_manifest(self, name: str, version: int | None) -> dict:
         """{'buckets': {bucket:version}, 'deltas': [versions],
         'base_rows': int, 'delta_rows': {version:int},
+        'delta_buckets': {version:[bucket ids]},
         'bucket_files': {bucket:[file-stats]},
         'delta_files': {version:[file-stats]},
         '_files_ref': version|None} as of ``version`` (greatest
@@ -419,7 +441,7 @@ class TableIO:
         v = self._manifest_version_le(name, version)
         if v is None:
             return {"buckets": {}, "deltas": [], "base_rows": 0,
-                    "delta_rows": {}, "bucket_files": {},
+                    "delta_rows": {}, "delta_buckets": {}, "bucket_files": {},
                     "delta_files": {}, "_files_ref": None}
         m = self._manifest_json(name, v)
         ref = m.get("bucket_files_ref")
@@ -436,6 +458,8 @@ class TableIO:
                 "base_rows": int(m.get("base_rows", 0)),
                 "delta_rows": {int(k): int(x) for k, x in
                                m.get("delta_rows", {}).items()},
+                "delta_buckets": {int(k): [int(b) for b in x] for k, x in
+                                  m.get("delta_buckets", {}).items()},
                 "bucket_files": {int(k): x for k, x in bf.items()},
                 "delta_files": {int(k): x for k, x in
                                 m.get("delta_files", {}).items()},
@@ -443,9 +467,9 @@ class TableIO:
 
     def state_rows(self, name: str, version: int | None = None) -> int | None:
         """Approximate row count of a bucketed state table at ``version``
-        from its manifest alone (base + pending delta rows; upper bound
-        — deltas may mask base rows).  No Spark action, no file I/O
-        beyond the manifest JSON.  None for snapshot-layout tables
+        from its manifest alone (base + the observed pending delta rows;
+        upper bound — deltas may mask base rows).  No Spark action, no
+        file I/O beyond the manifest JSON.  None for snapshot-layout tables
         (no cheap count exists there)."""
         if not self._is_bucketed(name):
             return None
@@ -459,7 +483,9 @@ class TableIO:
                         delta_rows: dict[int, int] | None = None,
                         bucket_files: dict[int, list] | None = None,
                         delta_files: dict[int, list] | None = None,
-                        bucket_files_ref: int | None = None) -> None:
+                        bucket_files_ref: int | None = None,
+                        delta_buckets: dict[int, list] | None = None
+                        ) -> None:
         """``bucket_files_ref`` (exclusive with ``bucket_files``) writes
         an O(1) STUB: per-file stats are not inlined but referenced from
         the given earlier full manifest — the Iceberg manifest-list
@@ -476,6 +502,9 @@ class TableIO:
                "base_rows": int(base_rows),
                "delta_rows": {str(k): int(x) for k, x in
                               sorted((delta_rows or {}).items())},
+               "delta_buckets": {str(k): sorted(x) for k, x in
+                                 sorted((delta_buckets or {}).items())
+                                 if k in dset},
                "buckets": {str(k): v for k, v in
                            sorted(buckets.items())},
                "delta_files": {str(k): x for k, x in
@@ -767,13 +796,15 @@ class TableIO:
         batch-bounded gate/enrich lookups.
 
         ``key_buckets`` maps each key to the bucket it hashes to (the
-        writer's ``bucket_of(key)`` — callers already collect the pair).
-        With it, each file's range is tested ONLY against its own
-        bucket's keys, and buckets holding no requested key are skipped
-        outright — without it, every key must be tested against every
-        bucket's files and the sorted-range skip degrades to ~1 file
-        per (key × bucket).  Sound because a key's rows can only live
-        in its own hash bucket.
+        writer's ``bucket_of(key)`` — the crawl observes the pairs on a
+        write it makes anyway).  With it, each file's range is tested
+        ONLY against its own bucket's keys, and buckets holding no
+        requested key are skipped outright — without it, every key must
+        be tested against every bucket's files and the sorted-range skip
+        degrades to ~1 file per (key × bucket).  Sound because a key's
+        rows can only live in its own hash bucket.  ``keys`` may be a
+        superset of the keys the consumer joins on: extra keys only open
+        extra files.
 
         Parquet writers may truncate string min/max, but only to a
         WIDER bound (prefix-truncated min ≤ true min, incremented
@@ -839,9 +870,7 @@ class TableIO:
         return df, info
 
     def merge_state(self, name: str, delta: DataFrame, version: int,
-                    base_version: int,
-                    touched: list[int] | None = None,
-                    delta_rows_hint: int | None = None) -> None:
+                    base_version: int) -> None:
         """MERGE ``delta`` into the state table: rows whose merge key
         matches an existing row are replaced, the rest inserted (the
         reference's ON DUPLICATE KEY UPDATE upsert, database.py:321-323).
@@ -853,22 +882,19 @@ class TableIO:
         winner in the delta-log resolution (_resolved_deltas).
 
         Bucketed layout (merge-on-read): the delta lands as ONE small
-        partition — strictly O(batch) bytes written, no base read — and
-        joins the manifest's delta list; the log is folded into exactly
-        its touched buckets when it grows past ``compact_every`` entries
-        or a base-row share (``compact_ratio``).  The fold reads the
-        materialized delta partitions, so the caller's delta LINEAGE
-        executes exactly once regardless of when the fold happens.
-        Snapshot layout: the legacy full merge+rewrite, same semantics.
-        ``touched`` is accepted for API compatibility and ignored (the
-        compactor derives touched buckets from the delta log itself).
-
-        ``delta_rows_hint``: a caller-known UPPER BOUND on the delta's
-        row count (e.g. from Observations the iteration already paid
-        for) — skips the sizing count action.  Only the
-        compaction-trigger bookkeeping uses it, which tolerates
-        overestimates (an early compaction is merely a cheaper-read
-        trade); exactness is never load-bearing."""
+        partition — strictly O(batch) bytes written, no base read — in
+        exactly one Spark job.  That write carries one ``Observation``
+        with the delta's row count and its set of bucket ids; both go
+        into the manifest next to the delta.  An empty delta writes no
+        partition and chains the manifest forward.  The log is folded
+        into the union of its recorded bucket sets when it grows past
+        ``compact_every`` entries or its recorded rows reach a base-row
+        share (``compact_ratio``), so the trigger sees the real size.
+        The fold reads the materialized delta partitions, so the
+        caller's delta LINEAGE executes exactly once regardless of when
+        the fold happens.  Observed values can only over-count (a
+        re-executed task), which costs at most an early or wider fold.
+        Snapshot layout: the legacy full merge+rewrite, same semantics."""
         t0 = time.time()
         spec = STATE_TABLES[name]
         # dispatch on the ON-DISK layout (fixed at init by write()): a
@@ -876,40 +902,44 @@ class TableIO:
         # default-bucketed TableIO can safely resume a snapshot-layout dir
         if self._is_bucketed(name):
             man = self._load_manifest(name, base_version)
-            threshold = max(self.compact_min_rows,
-                            int(man["base_rows"] * self.compact_ratio))
-            n_delta = delta_rows_hint if delta_rows_hint is not None \
-                else delta.count()
+            ddir = self._delta_dir(name, version)
+            tmp = ddir + ".tmp"
+            if os.path.exists(tmp):
+                shutil.rmtree(tmp)
+            obs = Observation()
+            # few files per delta: the content is batch-sized.  coalesce,
+            # not repartition — the delta lineage reads already-
+            # materialized batch parquets, so collapsing its parallelism
+            # is cheaper than a round-robin exchange (F-term, VERDICT r4)
+            (delta.observe(obs, F.count(F.lit(1)).alias("n"),
+                           F.collect_set(bucket_of(spec["bucket_key"],
+                                                   self.num_buckets))
+                           .alias("b"))
+             .coalesce(4).write.mode("overwrite").parquet(tmp))
+            n_delta = int(obs.get["n"] or 0)
             if n_delta == 0:
+                shutil.rmtree(tmp)
                 # chain the manifest forward so reads at `version` resolve
                 self._write_manifest(name, version, man["buckets"],
                                      man["deltas"],
                                      base_rows=man["base_rows"],
                                      delta_rows=man["delta_rows"],
+                                     delta_buckets=man["delta_buckets"],
                                      bucket_files=man["bucket_files"]
                                      if man["_files_ref"] is None else None,
                                      bucket_files_ref=man["_files_ref"],
                                      delta_files=man["delta_files"])
                 _trace(f"merge {name} v{version} (empty)", t0)
                 return
-            pending = sum(man["delta_rows"].values())
-            # merge-on-read: append one O(batch) delta partition
-            ddir = self._delta_dir(name, version)
-            tmp = ddir + ".tmp"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            # few files per delta: the content is batch-sized.  coalesce,
-            # not repartition — the delta lineage reads already-
-            # materialized batch parquets, so collapsing its parallelism
-            # is cheaper than a round-robin exchange (F-term, VERDICT r4)
-            delta.coalesce(4).write.mode("overwrite").parquet(tmp)
             if os.path.exists(ddir):
                 shutil.rmtree(ddir)
             os.rename(tmp, ddir)
             deltas = sorted(set(man["deltas"]) | {version})
-            delta_rows = dict(man["delta_rows"])
+            delta_rows = {v: n for v, n in man["delta_rows"].items()
+                          if v in deltas}
             delta_rows[version] = n_delta
-            delta_rows = {v: n for v, n in delta_rows.items() if v in set(deltas)}
+            delta_buckets = dict(man["delta_buckets"])
+            delta_buckets[version] = [int(x) for x in obs.get["b"]]
             delta_files = dict(man["delta_files"])
             if spec.get("stats_cols"):
                 delta_files[version] = _file_stats(ddir, spec["stats_cols"])
@@ -919,6 +949,7 @@ class TableIO:
             self._write_manifest(name, version, man["buckets"], deltas,
                                  base_rows=man["base_rows"],
                                  delta_rows=delta_rows,
+                                 delta_buckets=delta_buckets,
                                  bucket_files=man["bucket_files"]
                                  if man["_files_ref"] is None else None,
                                  bucket_files_ref=man["_files_ref"],
@@ -933,8 +964,10 @@ class TableIO:
             # once for the merged write); for the edges/seen deltas that
             # lineage is a corpus-batch window, so the double execution
             # dominated the commit phase (VERDICT r5 'Next round' #1).
+            threshold = max(self.compact_min_rows,
+                            int(man["base_rows"] * self.compact_ratio))
             if (len(deltas) >= max(1, self.compact_every)
-                    or n_delta + pending >= threshold):
+                    or sum(delta_rows.values()) >= threshold):
                 self._compact(name, version)
             _trace(f"merge {name} v{version} (mor)", t0)
         else:
@@ -949,7 +982,10 @@ class TableIO:
     def _compact(self, name: str, version: int) -> None:
         """Fold the pending delta log into its touched buckets
         (copy-on-write of exactly those buckets; everything else stays
-        by manifest reference) and reset the delta list.  Cost is
+        by manifest reference) and reset the delta list.  The touched
+        buckets are the union of the bucket sets the delta writes
+        recorded in the manifest — no job runs to find them; a delta
+        with no recorded set counts as touching every bucket.  Cost is
         O(touched buckets) once per compact_every commits — the
         amortized write path the 10^10-row frontier needs."""
         spec = STATE_TABLES[name]
@@ -957,11 +993,11 @@ class TableIO:
         man = self._load_manifest(name, version)
         if not man["deltas"]:
             return
-        res = self._resolved_deltas(name, man["deltas"], schema)
-        touched = [r["b"] for r in
-                   res.select(bucket_of(spec["bucket_key"],
-                                        self.num_buckets).alias("b"))
-                   .distinct().collect()]
+        # a delta committed before bucket sets were recorded may touch
+        # any bucket: fold them all (one wider rewrite, still no job)
+        touched = sorted({b for v in man["deltas"]
+                          for b in man["delta_buckets"].get(
+                              v, range(self.num_buckets))})
         if not touched:
             self._write_manifest(name, version, man["buckets"], [],
                                  base_rows=man["base_rows"],
@@ -969,6 +1005,7 @@ class TableIO:
                                  if man["_files_ref"] is None else None,
                                  bucket_files_ref=man["_files_ref"])
             return
+        res = self._resolved_deltas(name, man["deltas"], schema)
         base = self._read_base_buckets(name, man["buckets"], schema, touched)
         keys = res.select(*spec["merge_keys"]).distinct()
         merged = (base.join(F.broadcast(keys), spec["merge_keys"],

@@ -188,8 +188,7 @@ class TestShardedBloom:
         tio.write("frontier_sketch_shards", shards, 0)
         new_df = spark.createDataFrame(pd.DataFrame({"url": OUTSIDERS[:5]}))
         delta = update_sharded_blooms_delta(shards, new_df, "url", n_parts)
-        tio.merge_state("frontier_sketch_shards", delta, 1, 0, None,
-                        n_parts)
+        tio.merge_state("frontier_sketch_shards", delta, 1, 0)
         merged = {r.route: bytes(r.blob) for r in
                   tio.read_state("frontier_sketch_shards",
                                  schema=S.FRONTIER_SKETCH_SHARDS).collect()}

@@ -291,3 +291,27 @@ class TestFusedLinkFilter:
                for r in links.filter(fused).collect()}
         assert got == want
         assert len(want) > 0
+
+
+class TestIsinLiterals:
+    """The one-expression IN filter keeps exactly the rows Column.isin
+    keeps, for keys SQL string literals must escape."""
+
+    VALUES = ["a.com", "o'brien.com", "back\\slash.com", "q\\'mix",
+              "tab\there", "x" * 300, "ünï.com", ""]
+
+    def test_same_rows_and_expression_as_isin(self, spark):
+        from map_the_net_crawler_spark.operators.enrich import isin_literals
+        rows = [(v,) for v in self.VALUES + ["other.com", None, "A.COM"]]
+        df = spark.createDataFrame(rows, "domain_name string")
+        want = df.filter(F.col("domain_name").isin(self.VALUES))
+        got = df.filter(isin_literals("domain_name", self.VALUES))
+        assert sorted(r[0] for r in got.collect()) == \
+            sorted(r[0] for r in want.collect()) == sorted(self.VALUES)
+        assert (got._jdf.queryExecution().optimizedPlan().toString()
+                == want._jdf.queryExecution().optimizedPlan().toString())
+
+    def test_empty_list_keeps_no_rows(self, spark):
+        from map_the_net_crawler_spark.operators.enrich import isin_literals
+        df = spark.createDataFrame([("a",), (None,)], "k string")
+        assert df.filter(isin_literals("k", [])).count() == 0

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from map_the_net_crawler_spark import schemas as S
 from map_the_net_crawler_spark.config import CrawlConfig
 from map_the_net_crawler_spark.operators.frontier import DISCOVERY_TS_BASE
-from map_the_net_crawler_spark.plans.crawl import run_crawl
+from map_the_net_crawler_spark.plans.crawl import (init_run, read_outputs,
+                                                   run_crawl)
 from map_the_net_crawler_spark.plans.iteration import CrawlInputs
 from map_the_net_crawler_spark.storage import STATE_TABLES, TableIO, bucket_of
 
@@ -577,3 +578,58 @@ class TestManifestStubs:
         got = tio.read_state("frontier", schema=S.FRONTIER)
         assert got.filter(F.col("url").startswith("http://nv")).count() \
             == 80
+
+
+class _FrontierMergeFailed(RuntimeError):
+    pass
+
+
+class _SeenMergeFailed(RuntimeError):
+    pass
+
+
+class _FailingMerges(TableIO):
+    """TableIO double whose frontier and seen merges raise."""
+
+    def merge_state(self, name, *args, **kwargs):
+        if name == "frontier":
+            raise _FrontierMergeFailed("frontier merge")
+        if name == "seen":
+            raise _SeenMergeFailed("seen merge")
+        return super().merge_state(name, *args, **kwargs)
+
+
+class TestCommitPoint:
+    def test_frontier_merge_error_is_not_masked(self, spark, fixture_paths):
+        """The frontier merge fails while a concurrent early commit (seen)
+        fails too: the frontier error is the one that propagates, with
+        the seen failure attached instead of replacing it."""
+        tio = _FailingMerges(tempfile.mkdtemp(prefix="mtn_fail_"), spark,
+                             num_buckets=8)
+        with pytest.raises(_FrontierMergeFailed) as ei:
+            run_crawl(spark, tio, _inputs(spark, fixture_paths),
+                      CrawlConfig(),
+                      seeds=spark.read.parquet(fixture_paths["frontier_seed"]),
+                      max_iterations=1)
+        notes = getattr(ei.value, "__notes__", [])
+        assert any("_SeenMergeFailed" in n for n in notes), notes
+        # nothing was committed: the run meta still points at the seed
+        assert tio.read_meta()["iteration"] == 0
+
+    def test_read_outputs_reads_at_meta_version(self, spark, fixture_paths):
+        """A table version written without a meta commit (a crash
+        between an early commit and the meta write) stays invisible to
+        read_outputs until the meta commits it."""
+        tio = TableIO(tempfile.mkdtemp(prefix="mtn_meta_"), spark,
+                      num_buckets=8)
+        init_run(spark, tio,
+                 spark.read.parquet(fixture_paths["frontier_seed"]))
+        row = spark.createDataFrame(
+            [("http://orphan.example", "orphan.example", "success", 3, 1)],
+            S.SEEN)
+        tio.merge_state("seen", row, 1, 0)
+        assert tio.read("seen", S.SEEN).count() == 1   # on disk
+        assert read_outputs(tio)["seen"].count() == 0
+        tio.write_meta({**tio.read_meta(), "iteration": 1})
+        assert [r.url for r in read_outputs(tio)["seen"].collect()] == \
+            ["http://orphan.example"]
