@@ -126,8 +126,8 @@ def bench_crawl(spark, corpus_dir: str, timed_iterations: int = 2):
         total_urls += r.claimed
         total_s += dt
         merge_s += sum((r.timings or {}).get(k, 0.0) for k in
-                       ("new_pending_write", "sketch_commit",
-                        "touched_buckets", "tables_commit"))
+                       ("new_pending_write", "touched_buckets",
+                        "tables_commit"))
         iters.append({"iteration": i, "claimed": r.claimed,
                       "processed": r.processed, "new_urls": r.new_urls,
                       "sec": round(dt, 2), "timings": r.timings})
@@ -229,7 +229,7 @@ def bench_frontier_growth(spark, fillers=(50_000, 500_000)) -> dict:
     grows 10× — the old full-rewrite layout scaled with the corpus.
     Filler rows are priority-0 (never claimed), so every run does the
     same batch work over a 10×-different state size; timed at iteration
-    2+ (steady state: sketch reuse + touched-bucket merge)."""
+    2+ (steady state: touched-bucket merge)."""
     from map_the_net_crawler_spark import schemas as S
     from map_the_net_crawler_spark.config import CrawlConfig
     from map_the_net_crawler_spark.operators.frontier import \
@@ -294,19 +294,12 @@ def bench_frontier_growth(spark, fillers=(50_000, 500_000)) -> dict:
 
 def bench_membership(spark, n_frontier: int = 500_000,
                      n_candidates: int = 200_000) -> dict:
-    """The north-rule membership path: anti-join of discovered URLs vs
-    the frontier url set, plain vs Bloom-prefiltered (10% of candidates
-    already exist).  Reports wall times AND the anti-join input shrink —
-    the number that matters at the 10^10-row scale."""
+    """The membership path of the frontier merge: the exact anti-join of
+    discovered URLs vs the frontier url set (10% of candidates already
+    exist)."""
     import tempfile as _tf
 
     from pyspark.sql import functions as F
-
-    from map_the_net_crawler_spark.operators.seen import anti_join_with_sketch
-    from map_the_net_crawler_spark.sketches import (ShardedBloomProbe,
-                                                    bloom_probe_udf,
-                                                    build_bloom,
-                                                    build_sharded_blooms)
 
     d = _tf.mkdtemp(prefix="mtn_membench_")
     spark.range(n_frontier).select(
@@ -319,43 +312,15 @@ def bench_membership(spark, n_frontier: int = 500_000,
         .otherwise(F.concat(F.lit("http://n"), F.col("id") % 50_000,
                             F.lit(".org/q"), F.col("id")))
         .alias("clean_url")).write.parquet(f"{d}/cand")
-    frontier = spark.read.parquet(f"{d}/frontier")
     cand = spark.read.parquet(f"{d}/cand")
-    keys = frontier.select(F.col("url").alias("clean_url"))
+    keys = spark.read.parquet(f"{d}/frontier") \
+        .select(F.col("url").alias("clean_url"))
 
-    plain_sec, plain_n = timed(
-        lambda: anti_join_with_sketch(cand, keys, "clean_url").count())
-    t0 = time.time()
-    bloom = build_bloom(frontier, "url", n_frontier, 0.01)
-    build_sec = round(time.time() - t0, 2)
-    probe = bloom_probe_udf(spark, bloom)
-    bloom_sec, bloom_n = timed(
-        lambda: anti_join_with_sketch(cand, keys, "clean_url",
-                                      probe).count())
-    joined = cand.filter(probe(F.col("clean_url"))).count()
-    assert plain_n == bloom_n, "sketch changed the merge result"
-
-    # the 10^10-key layout: route-sharded blob table + cogroup probe
-    # (no driver merge, no broadcast — one shard per task)
-    t0 = time.time()
-    shards = build_sharded_blooms(frontier, "url", 32, n_frontier, 0.01)
-    shards.write.mode("overwrite").parquet(f"{d}/shards")
-    sharded_build_sec = round(time.time() - t0, 2)
-    sprobe = ShardedBloomProbe(spark.read.parquet(f"{d}/shards"), 32)
-    sharded_sec, sharded_n = timed(
-        lambda: anti_join_with_sketch(cand, keys, "clean_url",
-                                      sprobe).count())
-    assert plain_n == sharded_n, "sharded sketch changed the merge result"
+    plain_sec, _ = timed(
+        lambda: cand.join(keys, "clean_url", "left_anti").count())
     shutil.rmtree(d, ignore_errors=True)
     return {"candidates": n_candidates, "frontier": n_frontier,
-            "plain_anti_join_sec": plain_sec,
-            "bloom_build_sec": build_sec,
-            "bloom_anti_join_sec": bloom_sec,
-            "sharded_bloom_build_sec": sharded_build_sec,
-            "sharded_bloom_anti_join_sec": sharded_sec,
-            "anti_join_input_rows_plain": n_candidates,
-            "anti_join_input_rows_bloom": joined,
-            "shuffle_shrink_factor": round(n_candidates / max(joined, 1), 2)}
+            "plain_anti_join_sec": plain_sec}
 
 
 def bench_skew(spark, n_pending: int = 400_000, hub_share: float = 0.9,
@@ -459,9 +424,6 @@ def main():
     queries = {"crawl_iteration": crawl["sec_per_iteration"]}
     queries.update(bench_ops(spark, SF_DIR))
     membership = bench_membership(spark)
-    queries["membership_bloom_anti_join"] = membership["bloom_anti_join_sec"]
-    queries["membership_sharded_anti_join"] = \
-        membership["sharded_bloom_anti_join_sec"]
     skew = bench_skew(spark)
     queries["claim_hub_skew_salted"] = skew["claim_salt16_sec"]
     politeness = bench_crawl_politeness(spark, corpus)

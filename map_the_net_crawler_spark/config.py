@@ -32,30 +32,10 @@ class CrawlConfig:
     # Engine-only knobs
     politeness_window_s: float = 0.0  # 0 => politeness budget disabled (faithful claim mode)
     salt_buckets: int = 16            # skew salt for per-domain windows (SURVEY.md §4.2)
-    # membership sketch pre-filtering the frontier anti-join in
-    # merge_discoveries: 'bloom' | 'bloom_sharded' | 'cuckoo' | 'off'.
-    # Results are bit-identical in all modes (no-false-negative
-    # contract); the sketch only shrinks the anti-join shuffle
-    # (SURVEY.md §4.4).  'bloom' auto-promotes itself to the sharded
-    # layout when the bitmap would exceed broadcast_sketch_max_bytes:
-    # at the north rule's 10^10-URL frontier a 1%-fpp bitmap is ~12 GB
-    # — unbuildable on and unbroadcastable from any driver — so above
-    # the threshold the sketch lives as a route-sharded blob TABLE
-    # probed via cogroup (sketches.build_sharded_blooms/cogroup_probe);
-    # 'bloom_sharded' forces that layout at any size (used by tests).
-    membership_sketch: str = "bloom"
-    bloom_fpp: float = 0.01
-    broadcast_sketch_max_bytes: int = 256 * 2**20
-    bloom_shard_parts: int = 32
-    cuckoo_route_parts: int = 32
+    # URL-seen membership is always the exact left-anti join in
+    # merge_discoveries (bucket-pruned frontier side at scale); it has
+    # no knobs
     shuffle_partitions: int = 32
-    # materialize the filtered link rows only above this many extracted
-    # link rows (build_relationships references the subtree ~4×, so big
-    # batches pay one write to avoid 4 recomputes; small batches skip
-    # the write job entirely).  NOTE: keys off the PRE-filter extracted
-    # link count (the Observation the extract write already carries) —
-    # a batch whose links are mostly filtered out may still snapshot.
-    valid_links_snapshot_min_rows: int = 20_000
     # batch-key ceiling for the literal-isin dim prunes: below this many
     # claimed domains the enrichment/complete-set prunes use a pushed
     # in-filter (no broadcast subtree per dim); above it they fall back

@@ -74,10 +74,6 @@ def spread_small(df: DataFrame) -> DataFrame:
     return df.repartition(p)
 
 
-# backwards-compatible private alias (pre-round-6 name)
-_spread_small = spread_small
-
-
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicates on normalized text: one survivor (min doc_id)
     per content hash; returns (doc_id, content_hash, group_size,
@@ -124,8 +120,8 @@ def minhash_signature(docs: DataFrame, text_col: str = "text",
           .cast("long")
     # project to the two needed columns BEFORE the spread so the
     # round-robin exchange ships only (doc_id, text) — guide §2.3
-    sh = _spread_small(docs.select("doc_id",
-                                   F.col(text_col).alias("_mh_text"))) \
+    sh = spread_small(docs.select("doc_id",
+                                  F.col(text_col).alias("_mh_text"))) \
         .select("doc_id",
                 F.explode(shingles_col(F.col("_mh_text"), shingle_n))
                 .alias("shingle")) \

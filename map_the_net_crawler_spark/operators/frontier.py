@@ -171,8 +171,7 @@ def apply_claim_gates(claimed: DataFrame, seen_counts: DataFrame,
 def merge_discoveries(frontier: DataFrame, discoveries: DataFrame,
                       seen_counts: DataFrame, processed_domains: DataFrame,
                       cfg: CrawlConfig, next_seq: int,
-                      iteration: int, frontier_probe=None,
-                      rows_hint: int | None = None,
+                      iteration: int, rows_hint: int | None = None,
                       materializer=None) -> DataFrame:
     """add_discovered_urls_to_queue (domain_collector.py:1314-1348) as a
     batch merge.
@@ -226,19 +225,15 @@ def merge_discoveries(frontier: DataFrame, discoveries: DataFrame,
               .filter(F.col("_eff_cnt") < cfg.max_urls_per_domain)
               .drop("seen_cnt", "_hist_rank", "_eff_cnt"))
 
-    # never re-add a URL that ever existed in the frontier.  With a
-    # membership sketch (frontier_probe), provably-new URLs skip the
-    # anti-join shuffle; only might-contain rows join exactly
-    # (operators/seen.anti_join_with_sketch — bit-identical by the
-    # no-false-negative contract, reference probe database.py:494-506).
-    from .seen import anti_join_with_sketch
-    fresh = anti_join_with_sketch(
-        firsts, frontier.select(F.col("url").alias("clean_url")),
-        "clean_url", frontier_probe)
+    # never re-add a URL that ever existed in the frontier: an exact
+    # left-anti join against the frontier url set (reference probe
+    # database.py:494-506; operators/seen.py)
+    fresh = firsts.join(frontier.select(F.col("url").alias("clean_url")),
+                        "clean_url", "left_anti")
 
     seq_order = [*enqueue_order, F.col("clean_url").asc()]
     # F-term: assign_global_sequence sizes its plan with a count — over
-    # THIS whole subtree (first-wins window + sketch probe + frontier
+    # THIS whole subtree (first-wins window + quota joins + frontier
     # anti-join) if handed the lazy frame.  Callers either pass
     # ``materializer`` (df -> (scratch-backed df, exact rows): one pass
     # snapshots the survivors with the count observed on the same write,
@@ -287,7 +282,7 @@ def assign_global_sequence(df: DataFrame, order_cols: list,
     branches produce the identical mapping at any actual size, so the
     bound only picks the cheaper plan — and skips this function's own
     sizing count, which re-executes the caller's whole upstream subtree
-    (for merge_discoveries: the first-wins window + sketch probe +
+    (for merge_discoveries: the first-wins window + quota joins +
     frontier anti-join) just to choose a branch (F-term)."""
     n = rows_hint if rows_hint is not None else df.count()
     if n == 0:
@@ -337,7 +332,3 @@ def merge_frontier_upsert(frontier: DataFrame, new_rows: DataFrame) -> DataFrame
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn", "_gen"))
 
-
-def queue_stats(frontier: DataFrame) -> DataFrame:
-    """A1 (database.py:589-604): GROUP BY status COUNT(*)."""
-    return frontier.groupBy("status").agg(F.count("*").alias("cnt"))

@@ -29,21 +29,10 @@ def ugc_purge_candidates(nodes: DataFrame) -> DataFrame:
 
 
 def purge_ugc(nodes: DataFrame, edges: DataFrame,
-              frontier: DataFrame,
-              frontier_sketch=None) -> tuple[DataFrame, DataFrame, DataFrame]:
+              frontier: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Deletion in reference order relationships → queue → domains
     (cleanup_ugc_domains.py:322-344) as anti-joins; returns the purged
-    (nodes, edges, frontier).
-
-    ``frontier_sketch`` (a sketches.PartitionedCuckoo) is updated IN
-    PLACE by deleting the purged frontier URLs from their owning
-    partitions' filters — the deletability cuckoo buys over Bloom
-    (SURVEY.md §4.4): after a purge the sketch keeps pre-filtering the
-    frontier merge without an O(corpus) rebuild, still with zero false
-    negatives for the surviving rows.  The driver round-trip is bounded
-    by the purge candidate set (the UGC-pattern matches), not the
-    frontier; at-scale the same deletes run shard-locally (the route
-    owns the key)."""
+    (nodes, edges, frontier)."""
     bad = ugc_purge_candidates(nodes)
     edges2 = (edges
               .join(bad.withColumnRenamed("domain_name", "src_domain"),
@@ -52,11 +41,6 @@ def purge_ugc(nodes: DataFrame, edges: DataFrame,
                     "dst_domain", "left_anti"))
     frontier2 = frontier.join(bad, "domain_name", "left_anti")
     nodes2 = nodes.join(bad, "domain_name", "left_anti")
-    if frontier_sketch is not None:
-        purged_urls = sorted(
-            r["url"] for r in frontier
-            .join(bad, "domain_name", "left_semi").select("url").collect())
-        frontier_sketch.delete_batch(purged_urls)
     return nodes2, edges2, frontier2
 
 

@@ -1,32 +1,18 @@
-"""URL-seen set: upsert + membership pre-filters (SURVEY.md §2.1 S12,
-§2.3 J7, §4.4).
+"""URL-seen set: per-domain history counts (SURVEY.md §2.1 A2, §2.3 J7).
 
-Exactness always comes from the left-anti join against the seen/frontier
-tables; a membership sketch is a broadcastable *negative* pre-filter that
-lets the 10^10-scale merge skip the shuffle for the (vast majority of)
-URLs that were never seen.  Spark's built-in runtime bloom-filter join
-rule does not persist across iterations, so the engine builds its own
-(sketches.BloomSketch / PartitionedCuckoo — numpy bitmaps built
-distributed, probed by an Arrow UDF; see sketches.py) and wires it into
-the frontier merge via ``anti_join_with_sketch`` below.  The
-authoritative set is always the table.
+URL-seen membership has one path: the exact left-anti join of the
+discovered URLs against the frontier url set in
+``frontier.merge_discoveries``.  At scale the frontier side of that join
+is bucket-pruned to the candidates' own buckets before the join
+(``plans.iteration``), so the probe reads only the buckets a candidate
+can live in.  The frontier table is the authoritative set; no
+probabilistic pre-filter stands in front of it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def upsert_seen(seen: DataFrame, new_rows: DataFrame) -> DataFrame:
-    """record_url_processing upsert (database.py:508-531): unique on url,
-    last write wins for status/links_found."""
-    merged = seen.withColumn("_gen", F.lit(0)).unionByName(
-        new_rows.withColumn("_gen", F.lit(1)))
-    w = Window.partitionBy("url").orderBy(F.col("_gen").desc(),
-                                          F.col("processed_iteration").desc())
-    return (merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn", "_gen"))
 
 
 def seen_counts(seen: DataFrame) -> DataFrame:
@@ -51,46 +37,3 @@ def seen_counts_pruned(seen: DataFrame, domains: DataFrame) -> DataFrame:
             .join(F.broadcast(domains.select("domain_name").distinct()),
                   "domain_name", "left_semi")
             .groupBy("domain_name").agg(F.count("*").alias("seen_cnt")))
-
-
-def anti_join_seen(candidates: DataFrame, seen: DataFrame,
-                   url_col: str = "url") -> DataFrame:
-    """J7 exact membership: NOT EXISTS via left-anti join."""
-    return candidates.join(
-        seen.select(F.col("url").alias(url_col)).distinct(),
-        url_col, "left_anti")
-
-
-def anti_join_with_sketch(candidates: DataFrame, table_keys: DataFrame,
-                          key_col: str, probe=None) -> DataFrame:
-    """``candidates ANTI JOIN table_keys`` with an optional membership
-    sketch pre-filter.
-
-    ``probe`` is either a might_contain pandas UDF (broadcast Bloom /
-    partitioned cuckoo — fine up to ~10^8 keys) or a DataFrame-level
-    probe exposing ``.flag(df, key_col)`` (sketches.ShardedBloomProbe —
-    the 10^10-key layout: the sketch lives as a route-sharded blob table
-    and the probe is a cogroup, so no executor ever holds more than one
-    shard).
-
-    The sketch has NO false negatives, so rows it rejects are provably
-    absent from the table and bypass the anti-join shuffle entirely;
-    only the might-contain fraction (true hits + fpp) is joined exactly.
-    Result is bit-identical to the plain anti-join for any such probe
-    (pinned by tests/test_crawl_variants.py)."""
-    if probe is None:
-        return candidates.join(table_keys, key_col, "left_anti")
-    if hasattr(probe, "flag"):
-        flagged = probe.flag(candidates, key_col)
-    else:
-        flagged = candidates.withColumn("_maybe", probe(F.col(key_col)))
-    sure_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
-    return sure_new.unionByName(maybe.join(table_keys, key_col, "left_anti"))
-
-
-def build_seen_bloom(spark_df: DataFrame, expected: int, fpp: float):
-    """Broadcastable Bloom over seen urls — thin wrapper over
-    sketches.build_bloom (numpy bitmap, distributed build)."""
-    from ..sketches import build_bloom
-    return build_bloom(spark_df, "url", expected, fpp)

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from .dedup import spread_small as _spread_small
+from .dedup import spread_small
 from .frontier import _estimated_bytes
 
 # broadcast the query side of the bucket/cell joins only while its
@@ -49,29 +49,6 @@ def _maybe_broadcast(df: DataFrame) -> DataFrame:
     if _estimated_bytes(df) <= _QUERY_BROADCAST_MAX_BYTES:
         return F.broadcast(df)
     return df
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0).cast("double"), lambda acc, v: acc + v)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0).cast("double"),
-                              lambda acc, v: acc + v * v))
-
-
-def cosine_col(a, b):
-    """Pure-Column cosine — interpreted higher-order functions; correct
-    but slow.  Kept for tiny inputs and as the expression-level spec; the
-    hot paths use ``cosine_pairs_pd``."""
-    na, nb = _norm(a), _norm(b)
-    return F.when((na > 0) & (nb > 0), _dot(a, b) / (na * nb)) \
-            .otherwise(F.lit(0.0))
-
-
-def _as_double(col):
-    return F.transform(col, lambda v: v.cast("double"))
 
 
 def _stack(series: pd.Series) -> np.ndarray:
@@ -147,8 +124,8 @@ def brute_force_cosine_topk(queries: DataFrame, corpus: DataFrame,
     # numpy kernel (guide §2.5/§6: a 1-2 partition scan serializes the
     # matmul); result-identical — every global top-k row survives its
     # partition's local top-(k+1) under the same rounded total order
-    c = _spread_small(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                    F.col(vec_col).alias("vec")))
+    c = spread_small(corpus.select(F.col(id_col).alias("neighbor_id"),
+                                   F.col(vec_col).alias("vec")))
     scored = (c.mapInPandas(score, out_schema)
               .filter(F.col("query_id") != F.col("neighbor_id")))
     return _rank_topk(scored, k)
@@ -218,7 +195,7 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame, dim: int,
 
     q = with_sig(queries, "query_id", "q_vec")
     # spread the corpus scan so the signature UDF runs on all cores
-    c = with_sig(_spread_small(corpus.select(id_col, vec_col)),
+    c = with_sig(spread_small(corpus.select(id_col, vec_col)),
                  "neighbor_id", "c_vec")
     # the query side is broadcast-sized by contract (brute force
     # collects it to the driver outright) — broadcasting it makes the
@@ -245,8 +222,8 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, dim: int,
     # spread the corpus scan so the centroid pick + assign UDF
     # parallelize (deterministic under any partitioning — the pick is a
     # global orderBy, the assignment row-wise)
-    c = _spread_small(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                    F.col(vec_col).alias("c_vec")))
+    c = spread_small(corpus.select(F.col(id_col).alias("neighbor_id"),
+                                   F.col(vec_col).alias("c_vec")))
     cent_rows = (c.withColumn("_h", F.md5(F.col("neighbor_id").cast("string")))
                  .orderBy("_h", "neighbor_id").limit(n_cells)
                  .select("c_vec").collect())

@@ -45,6 +45,12 @@ from ..operators.links import (build_relationships,
 from ..operators.seen import seen_counts_pruned
 from ..storage import TableIO, bucket_of
 
+# snapshot the discovery anti-join survivors (fresh_links) only above
+# this many extracted link rows: big batches pay one write so the
+# sequencing count and the new_pending write reuse its scan; small
+# batches skip the write job and pass n_links as the plan hint.  Keys
+# off the PRE-filter link count the extract write already observes.
+_FRESH_LINKS_SNAPSHOT_MIN_ROWS = 20_000
 
 @dataclass
 class CrawlInputs:
@@ -75,10 +81,6 @@ class IterationResult:
     claim_io: dict | None = None
 
 
-def _empty(spark: SparkSession, schema) -> DataFrame:
-    return spark.createDataFrame([], schema)
-
-
 def _key_set(key: str, cond: Column | None, nb: int) -> Column:
     """Observation aggregate: the set of (k, b) = (key, its bucket id)
     pairs over the rows where ``cond`` holds.  Null keys are left out —
@@ -90,22 +92,17 @@ def _key_set(key: str, cond: Column | None, nb: int) -> Column:
         F.col(key).alias("k"), bucket_of(key, nb).alias("b"))))
 
 
-def _join_all(futs, primary: BaseException | None = None) -> None:
-    """Wait for every future.  Raise ``primary`` if given, else the
-    first background failure; every other failure is attached to the
-    raised error as a note, so no root cause is masked or dropped."""
-    errors = []
+def _join_all(futs, primary: BaseException) -> None:
+    """Wait for every future, then raise ``primary``; every other
+    background failure is attached to it as a note, so no root cause is
+    masked or dropped."""
     for f in futs:
         try:
             f.result()
         except BaseException as e:
-            errors.append(e)
-    if primary is None and errors:
-        primary = errors.pop(0)
-    if primary is not None:
-        for e in errors:
-            primary.add_note(f"concurrent commit also failed: {e!r}")
-        raise primary
+            if e is not primary:
+                primary.add_note(f"concurrent job also failed: {e!r}")
+    raise primary
 
 
 _TRACE = os.environ.get("MTN_TRACE", "") == "1"
@@ -147,140 +144,33 @@ def complete_data_domains(nodes: DataFrame, batch_domains: DataFrame,
                     "domain_name", "left_semi")
 
 
-def _prepare_sketch(spark: SparkSession, tio: TableIO, cfg: CrawlConfig,
-                    frontier: DataFrame, base: int, iteration: int,
-                    next_seq: int):
-    """The frontier membership sketch for this iteration: returns
-    (probe for merge_discoveries or None, commit function or None).
-    Provably-new discoveries skip the anti-join shuffle (SURVEY.md §4.4;
-    bit-exact by the no-false-negative contract —
-    tests/test_crawl_variants.py).  Needs only the BASE frontier, so
-    run_iteration starts it in its pool next to the gated write: an
-    O(frontier) rebuild runs under the gate and extract jobs instead of
-    on the critical path before the discovery merge.
-
-    INCREMENTAL MAINTENANCE (round 4): the sketch committed at
-    iteration v covers the frontier AT v, so the next iteration reuses
-    it directly and, after the merge, adds only the batch-bounded
-    new-URL set — O(batch) per iteration.  A full O(corpus) rebuild
-    happens only when the frontier outgrows the capacity the sketch
-    was sized for (built with 2× slack, so rebuilds amortize to one
-    per frontier doubling), or on mode change / first iteration.
-    Coverage invariant by induction: base sketch covers frontier@base,
-    frontier urls only ever grow by new_pending, which sketch_commit
-    inserts before the blob/shard-table commit."""
-    frontier_probe = None
-    sketch_commit = None
-    sk_meta = (tio.read_meta() or {}).get("sketch") or {}
-    if cfg.membership_sketch in ("bloom", "bloom_sharded"):
-        from ..sketches import (BloomSketch, ShardedBloomProbe,
-                                bloom_probe_udf, build_bloom,
-                                build_sharded_blooms, update_sharded_blooms,
-                                update_sharded_blooms_delta)
-        expected = max(1024, next_seq)
-        m, _k = BloomSketch.params_for(expected, cfg.bloom_fpp)
-        bitmap_bytes = (m + 7) // 8
-        # size-based physical-strategy pick: a driver-merged broadcast
-        # bitmap up to broadcast_sketch_max_bytes; above that (the north
-        # rule's 10^10-URL frontier => ~12 GB at 1% fpp) the sketch
-        # lives as a route-sharded blob TABLE probed via cogroup — no
-        # driver merge, no broadcast, one shard per task.
-        sharded = (cfg.membership_sketch == "bloom_sharded"
-                   or bitmap_bytes > cfg.broadcast_sketch_max_bytes)
-        reuse = (sk_meta.get("version") == base
-                 and sk_meta.get("cap", 0) >= next_seq
-                 and sk_meta.get("mode") == ("sharded" if sharded else "bloom"))
-        if sharded:
-            if reuse:
-                shards = tio.read("frontier_sketch_shards", version=base)
-                cap = int(sk_meta["cap"])
-            else:
-                cap = max(1024, 2 * next_seq)
-                shards = build_sharded_blooms(frontier, "url",
-                                              cfg.bloom_shard_parts,
-                                              cap, cfg.bloom_fpp)
-                # materialize the rebuild so downstream actions probe a
-                # cheap parquet scan rather than re-running the build
-                tio.write("frontier_sketch_build", shards, iteration)
-                shards = tio.read("frontier_sketch_build", version=iteration)
-            frontier_probe = ShardedBloomProbe(shards, cfg.bloom_shard_parts)
-
-            def sketch_commit(new_df, shards=shards, cap=cap, reuse=reuse):
-                if reuse:
-                    # O(touched routes) MERGE: only shard blobs owning a
-                    # new url are rewritten; the rest chain by manifest
-                    # reference (ADVICE r4 — was a full blob-table copy)
-                    delta = update_sharded_blooms_delta(
-                        shards, new_df, "url", cfg.bloom_shard_parts,
-                        cfg.bloom_fpp)
-                    tio.merge_state("frontier_sketch_shards", delta,
-                                    iteration, base)
-                else:
-                    upd = update_sharded_blooms(shards, new_df, "url",
-                                                cfg.bloom_shard_parts,
-                                                cfg.bloom_fpp)
-                    tio.write("frontier_sketch_shards", upd, iteration)
-                return {"mode": "sharded", "cap": cap, "version": iteration}
-        else:
-            if reuse:
-                sketch = BloomSketch.from_bytes(
-                    tio.read_blob("frontier_sketch", version=base))
-                cap = int(sk_meta["cap"])
-            else:
-                cap = max(1024, 2 * next_seq)
-                sketch = build_bloom(frontier, "url", cap, cfg.bloom_fpp)
-            frontier_probe = bloom_probe_udf(spark, sketch)
-
-            def sketch_commit(new_df, sketch=sketch, cap=cap):
-                import numpy as np
-                urls = sorted(r["url"] for r in new_df.select("url").collect())
-                if urls:
-                    sketch.add_batch(np.array(urls, dtype=object))
-                tio.write_blob("frontier_sketch", sketch.to_bytes(),
-                               iteration)
-                return {"mode": "bloom", "cap": cap, "version": iteration}
-    elif cfg.membership_sketch == "cuckoo":
-        from ..sketches import (PartitionedCuckoo, build_partitioned_cuckoo,
-                                cuckoo_probe_udf)
-        reuse = (sk_meta.get("version") == base
-                 and sk_meta.get("cap", 0) >= next_seq
-                 and sk_meta.get("mode") == "cuckoo")
-        if reuse:
-            pc = PartitionedCuckoo.from_bytes(
-                tio.read_blob("frontier_sketch", version=base))
-            cap = int(sk_meta["cap"])
-        else:
-            cap = max(64 * cfg.cuckoo_route_parts, 2 * next_seq)
-            pc = build_partitioned_cuckoo(
-                frontier, "url", cfg.cuckoo_route_parts,
-                max(64, cap // cfg.cuckoo_route_parts))
-        frontier_probe = cuckoo_probe_udf(spark, pc)
-
-        def sketch_commit(new_df, pc=pc, cap=cap):
-            urls = sorted(r["url"] for r in new_df.select("url").collect())
-            if urls:
-                pc.insert_batch(urls)
-            tio.write_blob("frontier_sketch", pc.to_bytes(), iteration)
-            return {"mode": "cuckoo", "cap": cap, "version": iteration}
-    return frontier_probe, sketch_commit
-
-
 def run_iteration(spark: SparkSession, tio: TableIO, inputs: CrawlInputs,
                   cfg: CrawlConfig, iteration: int, next_seq: int,
                   politeness_budget: int = 0,
                   salt_buckets: int = 1) -> IterationResult:
-    """Wrapper owning the iteration's background-job pool: whatever the
-    body raises, every in-flight concurrent write/merge is JOINED before
-    the exception propagates — no unsupervised background job can keep
-    writing run state while a caller unwinds (and cleans up the run
-    dir), and no background failure is silently dropped while the body
-    succeeds (the body joins its futures before the meta commit)."""
+    """Wrapper owning the iteration's background-job pool.  It keeps
+    every future the body submits: whatever the body raises, every
+    in-flight concurrent write/merge is JOINED before the exception
+    propagates, and their failures ride along as notes.  No
+    unsupervised background job can keep writing run state while a
+    caller unwinds (and cleans up the run dir), and no background
+    failure is dropped, however early the body fails (on success the
+    body joins its futures before the meta commit)."""
     from concurrent.futures import ThreadPoolExecutor
     pool = ThreadPoolExecutor(max_workers=5)
+    futs = []
+
+    def submit(fn, *args):
+        f = pool.submit(fn, *args)
+        futs.append(f)
+        return f
+
     try:
         return _run_iteration_impl(spark, tio, inputs, cfg, iteration,
                                    next_seq, politeness_budget,
-                                   salt_buckets, pool)
+                                   salt_buckets, submit)
+    except BaseException as e:
+        _join_all(futs, e)
     finally:
         pool.shutdown(wait=True)
 
@@ -289,7 +179,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
                         inputs: CrawlInputs, cfg: CrawlConfig,
                         iteration: int, next_seq: int,
                         politeness_budget: int, salt_buckets: int,
-                        _pool) -> IterationResult:
+                        submit) -> IterationResult:
     tmr = _Timer()
     # read every state table at the PREVIOUS iteration's version: the
     # run meta (written last) is the single commit point, so a crash
@@ -401,11 +291,6 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
                  F.sum(F.when(F.col("gate_status") == "skipped", 1)
                        .otherwise(0)).alias("n_skip"),
                  F.collect_set("domain_name").alias("doms"))
-    # the membership sketch (an O(frontier) job when rebuilt) builds
-    # under the gate jobs, which leave most cores idle; merge_discoveries
-    # waits for it
-    sketch_fut = _pool.submit(_prepare_sketch, spark, tio, cfg, frontier,
-                              base, iteration, next_seq)
     tio.write("gated", gated, iteration)
     tmr.lap("gated_write")
     gated = tio.read("gated", version=iteration)
@@ -497,8 +382,8 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # enrichment plan and the nodes_batch write (guide §2.6 overlap
     # independent jobs; VERDICT r5 'Next round' #1a: extend the 2-thread
     # pool to the scratch-write DAG).  The longer rels chain starts
-    # first and the enrich plan is built while it runs.  _pool is owned
-    # (and always joined) by the run_iteration wrapper.
+    # first and the enrich plan is built while it runs.  ``submit`` is
+    # the run_iteration wrapper's, which always joins what it hands out.
     #
     # slim projection: dragging the full extract schema through the
     # filter measured 5-9× slower than these 13 cols.  The survival
@@ -547,7 +432,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
             F.collect_set(bucket_of("clean_url", nb)).alias("cand"),
             _key_set("target_domain", None, nb).alias("tgt"),
             _key_set("redirect_final_domain", None, nb).alias("redir"))
-    f_rels = _pool.submit(tio.write, "rels", rels, iteration)
+    f_rels = submit(tio.write, "rels", rels, iteration)
 
     # ---- node rows (U1-U4, C6-C8, S9) ----------------------------------
     meta = (extracted.filter(F.col("link_pos") == -1)
@@ -695,7 +580,8 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
                     F.coalesce(F.col("links_found"), F.lit(0)).alias("links_found"),
                     F.lit(iteration).alias("processed_iteration")))
     # seen delta is unique on url (one row per batch domain), so the
-    # merge_state upsert == the windowed upsert_seen last-write-wins
+    # merge_state upsert is the reference's last-write-wins upsert
+    # (record_url_processing, database.py:508-531)
     seen_delta = seen_new
 
     # ---- metrics (S13/A5/C11) --------------------------------------------
@@ -744,23 +630,17 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # Each merge observes its own delta's size and bucket set on its
     # delta write — no caller estimate, no sizing job.
     commit_futs = [
-        _pool.submit(tio.merge_state, "seen", seen_delta, iteration, base),
-        _pool.submit(tio.merge_state, "nodes", nodes_delta, iteration,
-                     base),
-        _pool.submit(tio.merge_state, "edges", edges_delta, iteration,
-                     base),
-        _pool.submit(tio.append_partition, "metrics", metrics_new,
-                     iteration),
+        submit(tio.merge_state, "seen", seen_delta, iteration, base),
+        submit(tio.merge_state, "nodes", nodes_delta, iteration, base),
+        submit(tio.merge_state, "edges", edges_delta, iteration, base),
+        submit(tio.append_partition, "metrics", metrics_new, iteration),
     ]
 
     # ---- frontier update ------------------------------------------------
-    frontier_probe, sketch_commit = sketch_fut.result()
-    new_sk_meta = None
-    tmr.lap("sketch_build")
     # the new-row count rides the new_pending WRITE as an observed
     # metric (was a separate count job over the re-read parquet)
     obs_p = Observation()
-    # frontier_keys_view: at scale the anti-join's table side is
+    # frontier_keys_view: at scale the exact anti-join's table side is
     # bucket-pruned to the candidates' own buckets (bit-identical — a
     # candidate can only collide inside its bucket); merge_discoveries
     # uses the frontier ONLY as that url key set
@@ -779,11 +659,11 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
         return (tio.read("fresh_links", version=iteration),
                 int(obs_f.get["n"] or 0))
 
-    big_batch = n_links > cfg.valid_links_snapshot_min_rows
+    big_batch = n_links > _FRESH_LINKS_SNAPSHOT_MIN_ROWS
     new_pending = merge_discoveries(frontier_keys_view, discoveries,
                                     scounts_targets,
                                     processed_domains, cfg, next_seq,
-                                    iteration, frontier_probe,
+                                    iteration,
                                     rows_hint=None if big_batch else n_links,
                                     materializer=_mat_fresh if big_batch
                                     else None) \
@@ -793,11 +673,6 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     new_pending = tio.read("new_pending", version=iteration)
     n_new = int(obs_p.get["n"] or 0)
     tmr.lap("new_pending_count")
-    # commit the incrementally-updated sketch: covers frontier@iteration
-    # (= frontier@base ∪ new_pending) so the next iteration reuses it
-    if sketch_commit is not None:
-        new_sk_meta = sketch_commit(new_pending)
-    tmr.lap("sketch_commit")
 
     claimed_updates = gated.select(
         "url", "domain_name", "source_domain", "priority",
@@ -817,19 +692,14 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # below is the single commit point.  Bucketed layout: each merge
     # appends ONE O(batch) delta partition to the merge-on-read log
     # (folded into touched buckets when the log grows) — per-iteration
-    # I/O scales with the batch, not the corpus.  A frontier-merge
-    # failure is the error that propagates; the early commits are still
-    # joined, and their failures ride along as notes.
-    try:
-        tio.merge_state("frontier", frontier_delta, iteration, base)
-    except BaseException as e:
-        _join_all(commit_futs, e)
-    _join_all(commit_futs)
+    # I/O scales with the batch, not the corpus.  A failure here (the
+    # frontier merge first) is the error that propagates; the wrapper
+    # still joins the early commits and attaches their failures.
+    tio.merge_state("frontier", frontier_delta, iteration, base)
+    for f in commit_futs:
+        f.result()
     tmr.lap("tables_commit")
-    run_meta = {"iteration": iteration, "next_seq": next_seq + n_new}
-    if new_sk_meta is not None:
-        run_meta["sketch"] = new_sk_meta
-    tio.write_meta(run_meta)
+    tio.write_meta({"iteration": iteration, "next_seq": next_seq + n_new})
     if cfg.snapshot_retain > 0:
         tio.prune(cfg.snapshot_retain, iteration)
 

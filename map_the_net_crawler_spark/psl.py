@@ -114,12 +114,6 @@ def extract(hostname: str) -> ExtractResult:
     return ExtractResult(subdomain, domain, suffix)
 
 
-def registrable_domain(hostname: str) -> str:
-    """domain.suffix, or the bare host when the TLD is unlisted."""
-    r = extract(hostname)
-    return r.registered_domain or hostname.lower().strip(".")
-
-
 def naive_main_domain(domain_name: str) -> str:
     """Reference's naive last-2-labels 'main domain' for WHOIS
     (domain_collector.py:226-232) — NOT PSL-aware, by design."""

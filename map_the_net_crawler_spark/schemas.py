@@ -105,15 +105,6 @@ METRICS = T.StructType([
     T.StructField("agent_name", T.StringType(), True),
 ])
 
-# Route-sharded Bloom membership sketch over the frontier url set
-# (sketches.build_sharded_blooms) — a STATE table so its per-iteration
-# commit is an O(touched-routes) MERGE delta, not a full blob-table
-# rewrite (ADVICE r4: untouched shards chain by manifest reference).
-FRONTIER_SKETCH_SHARDS = T.StructType([
-    T.StructField("route", T.LongType(), False),
-    T.StructField("blob", T.BinaryType(), True),
-])
-
 # robots.txt fixture table (reference live fetch: domain_collector.py:1537-1564)
 ROBOTS = T.StructType([
     T.StructField("domain", T.StringType(), False),

@@ -112,11 +112,6 @@ STATE_TABLES: dict[str, dict] = {
     "edges": {"bucket_key": "src_domain",
               "merge_keys": ["src_domain", "dst_domain",
                              "relationship_type"]},
-    # route-sharded membership-sketch blobs: merged per iteration as an
-    # O(touched-routes) delta so untouched shard bytes are never
-    # rewritten (ADVICE r4 — sharded-sketch commit I/O)
-    "frontier_sketch_shards": {"bucket_key": "route",
-                               "merge_keys": ["route"]},
 }
 APPEND_TABLES = {"metrics"}
 # the schema a snapshot write recorded, inside its version dir
@@ -1133,7 +1128,7 @@ class TableIO:
                         p = os.path.join(d, e)
                         shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
 
-    # --- binary blobs (membership sketches), same versioned layout ------
+    # --- binary blobs, same versioned layout ---------------------------
 
     def write_blob(self, name: str, blob: bytes, version: int) -> None:
         d = self._table_dir(name)

@@ -55,8 +55,3 @@ def clean_url_for_queue(url: str) -> str:
     except Exception:
         return url
 
-
-def strip_www(netloc: str) -> str:
-    """Lowercase + drop leading 'www.' (domain_collector.py:992-995)."""
-    n = netloc.lower()
-    return n[4:] if n.startswith("www.") else n

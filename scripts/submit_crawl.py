@@ -7,8 +7,8 @@ spark-submit --py-files on a multi-executor cluster").
 
 In the sandbox the same script runs on local[N] against fixture
 parquet.  Pass --resume to continue a checkpointed run (no seeds read).
-All cluster-mode knobs (AQE, shuffle partitions, membership sketch) are
-plain Spark confs / CrawlConfig fields — no code change between
+All cluster-mode knobs (AQE, shuffle partitions) are plain Spark
+confs / CrawlConfig fields — no code change between
 local[32] and a 1000-executor cluster.
 """
 
@@ -37,8 +37,6 @@ def main(argv=None) -> int:
     ap.add_argument("--max-depth", type=int, default=3)
     ap.add_argument("--politeness-budget", type=int, default=0)
     ap.add_argument("--salt-buckets", type=int, default=1)
-    ap.add_argument("--membership-sketch", default="bloom",
-                    choices=["bloom", "cuckoo", "off"])
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -61,8 +59,7 @@ def main(argv=None) -> int:
         dns=spark.read.parquet(f"{fx}/dns.parquet"),
         ssl=spark.read.parquet(f"{fx}/ssl.parquet"),
         geo=spark.read.parquet(f"{fx}/geo.parquet"))
-    cfg = CrawlConfig(max_items=args.max_items, max_depth=args.max_depth,
-                      membership_sketch=args.membership_sketch)
+    cfg = CrawlConfig(max_items=args.max_items, max_depth=args.max_depth)
     seeds = None if args.resume else spark.read.parquet(args.seeds)
     summary = run_crawl(spark, TableIO(args.run_dir, spark), inputs, cfg,
                         seeds=seeds, max_iterations=args.iterations,

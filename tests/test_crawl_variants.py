@@ -63,60 +63,6 @@ def test_depth_gate_skips_match_oracle(spark, fixture_paths, fixture_frames):
     assert eng_f == ora_f
 
 
-def test_membership_sketch_modes_identical(spark, fixture_paths):
-    """The frontier-merge membership sketches (SURVEY.md §4.4,
-    BASELINE.json north_rule) are pure anti-join accelerators: crawling
-    with sketch off / Bloom / partitioned-cuckoo must produce bit-exact
-    identical tables.  Also checks the sketch blob is snapshotted."""
-    import tempfile
-    results = {}
-    for mode in ("off", "bloom", "bloom_sharded", "cuckoo"):
-        cfg = CrawlConfig(membership_sketch=mode)
-        tio = TableIO(tempfile.mkdtemp(prefix=f"mtn_sk_{mode}_"), spark)
-        run_crawl(spark, tio, _inputs(spark, fixture_paths), cfg,
-                  seeds=spark.read.parquet(fixture_paths["frontier_seed"]),
-                  max_iterations=2)
-        tables = {}
-        for t, key in (("frontier", "url"), ("seen", "url"),
-                       ("edges", "src_domain")):
-            tables[t] = sorted(map(tuple, tio.read(t).collect()))
-        results[mode] = tables
-        if mode == "bloom_sharded":
-            # the at-scale layout snapshots a (route, blob) shard TABLE
-            shards = tio.read("frontier_sketch_shards").collect()
-            assert len(shards) >= 1
-            assert {c for c in ("route", "blob")} <= \
-                set(tio.read("frontier_sketch_shards").columns)
-        elif mode != "off":
-            assert tio.read_blob("frontier_sketch") is not None
-    assert results["off"] == results["bloom"]
-    assert results["off"] == results["bloom_sharded"]
-    assert results["off"] == results["cuckoo"]
-
-
-def test_bloom_auto_promotes_to_sharded(spark, fixture_paths):
-    """'bloom' mode with a tiny broadcast_sketch_max_bytes must pick the
-    sharded cogroup layout on its own (the size-based strategy pick the
-    north rule's 10^10 frontier requires) and still crawl bit-exactly."""
-    import tempfile
-    base_cfg = CrawlConfig(membership_sketch="off")
-    tio0 = TableIO(tempfile.mkdtemp(prefix="mtn_auto_off_"), spark)
-    run_crawl(spark, tio0, _inputs(spark, fixture_paths), base_cfg,
-              seeds=spark.read.parquet(fixture_paths["frontier_seed"]),
-              max_iterations=2)
-    cfg = CrawlConfig(membership_sketch="bloom",
-                      broadcast_sketch_max_bytes=1)  # force promotion
-    tio = TableIO(tempfile.mkdtemp(prefix="mtn_auto_sh_"), spark)
-    run_crawl(spark, tio, _inputs(spark, fixture_paths), cfg,
-              seeds=spark.read.parquet(fixture_paths["frontier_seed"]),
-              max_iterations=2)
-    assert tio.read("frontier_sketch_shards").count() >= 1
-    assert tio.read_blob("frontier_sketch") is None  # broadcast path not taken
-    for t in ("frontier", "seen", "edges"):
-        assert sorted(map(tuple, tio.read(t).collect())) == \
-            sorted(map(tuple, tio0.read(t).collect()))
-
-
 def test_politeness_budget_deterministic(spark, fixture_paths):
     """Politeness mode is an engine extension (no oracle), but its claim
     selection must be deterministic across input partitionings and salt

@@ -215,27 +215,3 @@ class TestBoundedBroadcasts:
         out = enrich_batch(batch, whois, dns, ssl, geo, nodes)
         self._assert_bounded(plan_of(out), "Scan parquet")
 
-
-class TestSketchPath:
-    def test_sure_new_rows_bypass_join(self, spark):
-        """anti_join_with_sketch: the provably-new branch must contain no
-        join at all — only the might-contain branch joins."""
-        import numpy as np
-        import pandas as pd
-
-        from map_the_net_crawler_spark.operators.seen import \
-            anti_join_with_sketch
-        from map_the_net_crawler_spark.sketches import (BloomSketch,
-                                                        bloom_probe_udf)
-        sk = BloomSketch.empty(100, 0.01)
-        sk.add_batch(np.array(["http://a.com"], dtype=object))
-        probe = bloom_probe_udf(spark, sk)
-        cand = spark.createDataFrame(pd.DataFrame(
-            {"clean_url": [f"http://x{i}.com" for i in range(10)]}))
-        keys = spark.createDataFrame(pd.DataFrame(
-            {"clean_url": ["http://a.com"]}))
-        out = anti_join_with_sketch(cand, keys, "clean_url", probe)
-        plan = plan_of(out)
-        # exactly one join (the maybe-branch anti join), one union
-        assert plan.count("Join") >= 1 and "Union" in plan
-        assert out.count() == 10

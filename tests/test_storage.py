@@ -273,8 +273,6 @@ class TestBucketedLayout:
         # per bucket: at most the window (1) + the pre-window anchor
         for t in STATE_TABLES:
             tdir = os.path.join(tio.root, t)
-            if not os.path.isdir(tdir):
-                continue  # sketch-shard table only exists in bloom mode
             for e in os.listdir(tdir):
                 if not e.startswith("b") or not e[1:].isdigit():
                     continue
@@ -588,6 +586,10 @@ class _SeenMergeFailed(RuntimeError):
     pass
 
 
+class _NewPendingWriteFailed(RuntimeError):
+    pass
+
+
 class _FailingMerges(TableIO):
     """TableIO double whose frontier and seen merges raise."""
 
@@ -599,22 +601,37 @@ class _FailingMerges(TableIO):
         return super().merge_state(name, *args, **kwargs)
 
 
+class _FailingPendingWrite(_FailingMerges):
+    """_FailingMerges whose new_pending write raises too: the body fails
+    before it reaches the frontier merge or joins the early commits."""
+
+    def write(self, name, *args, **kwargs):
+        if name == "new_pending":
+            raise _NewPendingWriteFailed("new_pending write")
+        return super().write(name, *args, **kwargs)
+
+
 class TestCommitPoint:
     def test_frontier_merge_error_is_not_masked(self, spark, fixture_paths):
-        """The frontier merge fails while a concurrent early commit (seen)
-        fails too: the frontier error is the one that propagates, with
-        the seen failure attached instead of replacing it."""
-        tio = _FailingMerges(tempfile.mkdtemp(prefix="mtn_fail_"), spark,
-                             num_buckets=8)
-        with pytest.raises(_FrontierMergeFailed) as ei:
-            run_crawl(spark, tio, _inputs(spark, fixture_paths),
-                      CrawlConfig(),
-                      seeds=spark.read.parquet(fixture_paths["frontier_seed"]),
-                      max_iterations=1)
-        notes = getattr(ei.value, "__notes__", [])
-        assert any("_SeenMergeFailed" in n for n in notes), notes
-        # nothing was committed: the run meta still points at the seed
-        assert tio.read_meta()["iteration"] == 0
+        """A body failure while a concurrent early commit (seen) fails
+        too: the body's error is the one that propagates, with the seen
+        failure attached instead of replacing it or being dropped.  Two
+        cases: the frontier merge fails (the body's last step before it
+        joins the commits) and the new_pending write fails (earlier)."""
+        for io_cls, err in ((_FailingMerges, _FrontierMergeFailed),
+                            (_FailingPendingWrite, _NewPendingWriteFailed)):
+            tio = io_cls(tempfile.mkdtemp(prefix="mtn_fail_"), spark,
+                         num_buckets=8)
+            with pytest.raises(err) as ei:
+                run_crawl(spark, tio, _inputs(spark, fixture_paths),
+                          CrawlConfig(),
+                          seeds=spark.read.parquet(
+                              fixture_paths["frontier_seed"]),
+                          max_iterations=1)
+            notes = getattr(ei.value, "__notes__", [])
+            assert any("_SeenMergeFailed" in n for n in notes), (err, notes)
+            # nothing was committed: the run meta still points at the seed
+            assert tio.read_meta()["iteration"] == 0
 
     def test_read_outputs_reads_at_meta_version(self, spark, fixture_paths):
         """A table version written without a meta commit (a crash
