@@ -262,10 +262,10 @@ def _enrich_probe_batch(spark: SparkSession):
 def _enrich_probe(spark: SparkSession) -> DataFrame:
     from map_the_net_crawler_spark import schemas as _S
     from map_the_net_crawler_spark.operators.enrich import enrich_batch
+    from map_the_net_crawler_spark.storage import empty_frame
     return enrich_batch(_enrich_probe_batch(spark), _fx(spark, "whois"),
                         _fx(spark, "dns"), _fx(spark, "ssl"),
-                        _fx(spark, "geo"),
-                        spark.createDataFrame([], _S.NODES))
+                        _fx(spark, "geo"), empty_frame(spark, _S.NODES))
 
 
 def q_ssl_join(spark: SparkSession, sf_dir: str) -> DataFrame:

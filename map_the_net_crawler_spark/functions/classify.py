@@ -1,6 +1,13 @@
 """Category / tags / relationship-type / date-normalization Columns
 (SURVEY.md §2.7 C3-C8) plus the PSL pandas UDF.
 
+The crawl iteration computes category, tags and the C4 subdomain
+predicate in Python inside the extract pass (functions/extract.py, over
+the same rules.py and psl.py sources), so its plans run no UDF from this
+module.  category_col, tags_col, is_subdomain_rel and psl_extract are
+the SQL-checkable statements of those rules: the ``__spark_entry__.py``
+queries use them, and tests pin the extract pass to them.
+
 - category: the reference's 44-branch first-match keyword chain
   (domain_collector.py:318-417) generated from rules.CATEGORY_RULES as an
   ordered when() chain — order-sensitive, preserved exactly.
@@ -39,33 +46,6 @@ def psl_extract(hostnames: pd.Series) -> pd.DataFrame:
     """Vectorized tldextract equivalent (offline PSL snapshot)."""
     parts = [psl_extract_py(h) if h else ("", "", "") for h in hostnames]
     return pd.DataFrame(parts, columns=["subdomain", "domain", "suffix"])
-
-
-_CLASSIFY_RESULT = T.StructType([
-    T.StructField("category", T.StringType()),
-    T.StructField("tags", T.ArrayType(T.StringType())),
-])
-
-
-@F.pandas_udf(_CLASSIFY_RESULT)
-def classify_domain(title: pd.Series, description: pd.Series,
-                    domain: pd.Series, keywords: pd.Series) -> pd.DataFrame:
-    """Category + tags as one Arrow-vectorized UDF over rules.py.
-
-    Semantically identical to category_col/tags_col below (same
-    CATEGORY_RULES/derive_tags source of truth); used on the per-domain
-    node path where cardinality is tiny and the 44-branch Column CASE
-    would cost ~2 min of one-time whole-stage-codegen compilation — the
-    Column variants remain for SQL-oracle-checkable standalone queries
-    and high-cardinality uses."""
-    from ..rules import categorize, derive_tags
-    out = []
-    for t, d, dom, kw in zip(title, description, domain, keywords):
-        cat = categorize(t if isinstance(t, str) else None,
-                         d if isinstance(d, str) else None, dom)
-        out.append((cat, derive_tags(kw if isinstance(kw, str) else None,
-                                     dom, cat)))
-    return pd.DataFrame(out, columns=["category", "tags"])
 
 
 def category_col(title: Column, description: Column, domain: Column) -> Column:

@@ -270,7 +270,7 @@ def assign_global_sequence(df: DataFrame, order_cols: list,
 
     Two-phase (the classic zipWithIndex shape, in DataFrame space):
     range-partition by the order keys → per-partition counts → cumulative
-    offsets (a tiny driver-side list) → offset + intra-partition
+    offsets (a tiny driver-side map literal) → offset + intra-partition
     row_number.  The result depends only on the total ORDER, not on the
     partition bounds, so it is identical at any parallelism — the
     property the crawl-order determinism tests pin (SURVEY.md §7.3).
@@ -298,18 +298,18 @@ def assign_global_sequence(df: DataFrame, order_cols: list,
               .withColumn("_pid", F.spark_partition_id()))
     counts = {r["_pid"]: r["cnt"] for r in
               ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, start
+    # the offsets ride the plan as a literal map Column: a local table
+    # here would be a Python-backed RDD plus a broadcast join
+    pairs, acc = [], start
     for pid in sorted(counts):
-        offsets[pid] = acc
+        pairs += [F.lit(pid), F.lit(acc).cast("long")]
         acc += counts[pid]
-    off_df = ranged.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long")
+    off = F.element_at(F.create_map(*pairs), F.col("_pid"))
     w = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (ranged.join(F.broadcast(off_df), "_pid")
+    return (ranged
             .withColumn("discovery_seq",
-                        (F.col("_off") + F.row_number().over(w) - 1)
-                        .cast("long"))
-            .drop("_pid", "_off"))
+                        (off + F.row_number().over(w) - 1).cast("long"))
+            .drop("_pid"))
 
 
 def merge_frontier_upsert(frontier: DataFrame, new_rows: DataFrame) -> DataFrame:

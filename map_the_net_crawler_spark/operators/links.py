@@ -59,7 +59,9 @@ def build_relationships(valid_links: DataFrame, redirects: DataFrame,
                         cfg: CrawlConfig) -> DataFrame:
     """Dedup → gates → typing → caps.  Input rows carry:
     (domain_name, claim_rank, src_depth, link_pos, href, link_text,
-     href_scheme, target_domain, clean_url).
+     href_scheme, target_domain, clean_url, is_sub) — ``is_sub`` is the
+    C4 subdomain predicate the extract pass computed per link row, so
+    the plan runs no Python (PSL lookups included).
 
     Output: one row per surviving link with relationship_type,
     redirect_final_domain (nullable), is_internal.
@@ -99,42 +101,9 @@ def build_relationships(valid_links: DataFrame, redirects: DataFrame,
     # domain-pattern exclusion on the target (:1059-1062)
     df = df.filter(~X.domain_excluded(F.col("target_domain")))
 
-    # C4 subdomain typing via the PSL UDF (broadcast-sized distinct
-    # set).  Hosts come from VALID_LINKS — a superset of df's survivors
-    # — not from df itself: df's lineage holds the dedup window and the
-    # quota joins, and each of the two host_parts broadcasts below
-    # re-executes its subtree, so anchoring on the (materialized)
-    # valid_links scan keeps that re-execution a cheap scan+distinct
-    # instead of two extra window shuffles (VERDICT r4 item 3)
-    hosts = (valid_links.select(F.col("domain_name").alias("host"))
-             .unionByName(valid_links.select(F.col("target_domain")
-                                             .alias("host")))
-             .distinct())
-    host_parts = hosts.select(
-        "host", C.psl_extract(F.col("host")).alias("_p")
-    ).select("host", F.col("_p.subdomain").alias("psl_sub"),
-             F.col("_p.domain").alias("psl_dom"),
-             F.col("_p.suffix").alias("psl_suf"))
-    # both joins broadcast the SAME host_parts subtree (aliases applied
-    # outside the exchange), so the physical plan computes the PSL
-    # extraction once and reuses the exchange for the second side
-    sp, tp = host_parts.alias("_sp"), host_parts.alias("_tp")
-    df = (df
-          .join(F.broadcast(sp),
-                F.col("domain_name") == F.col("_sp.host"), "left")
-          .join(F.broadcast(tp),
-                F.col("target_domain") == F.col("_tp.host"), "left")
-          .withColumn("src_sub", F.col("_sp.psl_sub"))
-          .withColumn("src_dom", F.col("_sp.psl_dom"))
-          .withColumn("src_suf", F.col("_sp.psl_suf"))
-          .withColumn("tgt_sub", F.col("_tp.psl_sub"))
-          .withColumn("tgt_dom", F.col("_tp.psl_dom"))
-          .withColumn("tgt_suf", F.col("_tp.psl_suf"))
-          .drop(sp["host"], sp["psl_sub"], sp["psl_dom"], sp["psl_suf"])
-          .drop(tp["host"], tp["psl_sub"], tp["psl_dom"], tp["psl_suf"]))
-    is_sub = C.is_subdomain_rel(
-        F.col("src_sub"), F.col("src_dom"), F.col("src_suf"),
-        F.col("tgt_sub"), F.col("tgt_dom"), F.col("tgt_suf"))
+    # C4 subdomain typing: the extract pass computed the predicate over
+    # the PSL parts of both hosts (functions/extract.py)
+    is_sub = F.col("is_sub")
 
     # J6 redirect resolution: HEAD snapshot left join on the raw href —
     # only probed when not typed subdomain (:1072-1091)

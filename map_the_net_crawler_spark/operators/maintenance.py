@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.filters import domain_excluded
+from ..storage import empty_frame
 
 
 def ugc_purge_candidates(nodes: DataFrame) -> DataFrame:
@@ -148,4 +149,4 @@ def backfill_missing(nodes: DataFrame, whois: DataFrame, dns: DataFrame,
 
 def wipe(spark, schema) -> DataFrame:
     """wipe_database.py:33-53 — overwrite with empty."""
-    return spark.createDataFrame([], schema)
+    return empty_frame(spark, schema)

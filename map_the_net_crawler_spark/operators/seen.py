@@ -15,15 +15,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def seen_counts(seen: DataFrame) -> DataFrame:
-    """A2 (database.py:533-545): history rows per domain.  The table is
-    unique on url, so count(*) == count(distinct url)."""
-    return seen.groupBy("domain_name").agg(F.count("*").alias("seen_cnt"))
-
-
 def seen_counts_pruned(seen: DataFrame, domains: DataFrame) -> DataFrame:
-    """seen_counts restricted to a bounded domain set (one broadcast
-    semi-join into the seen scan, then the group-by).
+    """A2 (database.py:533-545): history rows per domain, restricted to
+    a bounded domain set (one broadcast semi-join into the seen scan,
+    then the group-by).  The table is unique on url, so count(*) ==
+    count(distinct url).
 
     The crawl loop only ever JOINS the counts against iteration-bounded
     key sets (claimed domains, this batch's discovery targets), so the

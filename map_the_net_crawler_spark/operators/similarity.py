@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from ..storage import empty_frame
 from .dedup import spread_small
 from .frontier import _estimated_bytes
 
@@ -92,7 +93,7 @@ def brute_force_cosine_topk(queries: DataFrame, corpus: DataFrame,
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
-        return spark.createDataFrame([], out_schema + ", rank int")
+        return empty_frame(spark, out_schema + ", rank int")
 
     q_ids = np.asarray([r[0] for r in q_rows])
     Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)

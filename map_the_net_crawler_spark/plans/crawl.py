@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from .. import schemas as S
 from ..config import CrawlConfig
-from ..storage import TableIO
+from ..storage import TableIO, empty_frame
 from .iteration import CrawlInputs, IterationResult, run_iteration
 
 
@@ -29,10 +29,10 @@ def init_run(spark: SparkSession, tio: TableIO, seeds: DataFrame) -> int:
     pending frontier rows; all other tables start empty."""
     seeds = seeds.select(*[f.name for f in S.FRONTIER.fields])
     tio.write("frontier", seeds, 0)
-    tio.write("seen", spark.createDataFrame([], S.SEEN), 0)
-    tio.write("nodes", spark.createDataFrame([], S.NODES), 0)
-    tio.write("edges", spark.createDataFrame([], S.EDGES), 0)
-    tio.write("metrics", spark.createDataFrame([], S.METRICS), 0)
+    tio.write("seen", empty_frame(spark, S.SEEN), 0)
+    tio.write("nodes", empty_frame(spark, S.NODES), 0)
+    tio.write("edges", empty_frame(spark, S.EDGES), 0)
+    tio.write("metrics", empty_frame(spark, S.METRICS), 0)
     next_seq = (seeds.agg(F.max("discovery_seq")).collect()[0][0] or -1) + 1
     tio.write_meta({"iteration": 0, "next_seq": next_seq})
     return next_seq

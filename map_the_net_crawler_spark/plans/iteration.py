@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 
 from .. import schemas as S
 from ..config import CrawlConfig
-from ..functions.classify import classify_domain
 from ..functions.extract import extract_pages
 from ..functions.robots import make_robots_udf
 from ..operators.enrich import enrich_batch, isin_literals
@@ -333,7 +332,8 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
 
     # broadcast joins inherit the streaming side's partitioning — a pages
     # snapshot read as few splits would serialize the extract UDF; spread
-    # the batch across all cores before the Arrow stage
+    # the batch across all cores before the Arrow stage.  robots_ok rides
+    # along for the pass's category/tags masking
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # processed-domain and link counts ride the extract WRITE: each batch
     # domain yields exactly one metadata row (link_pos == -1), so n_meta
@@ -362,7 +362,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
             (F.col("link_pos") >= 0) & F.col("_link_ok"), nb)
             .alias("tgt"))
     extracted = extract_pages(
-        fetched.select("url", "domain_name", "html")
+        fetched.select("url", "domain_name", "html", "robots_ok")
         .repartition(n_part, "url")) \
         .withColumn("_link_ok", _link_ok) \
         .observe(obs_e, *extract_obs)
@@ -398,7 +398,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
              .select("domain_name", "link_pos", "href", "link_text",
                      "href_scheme", "href_netloc", "href_path",
                      "n_query_params", "param_names", "target_domain",
-                     "clean_url")
+                     "clean_url", "is_sub")
              .join(F.broadcast(binfo), "domain_name", "inner")
              .filter(F.col("robots_ok"))
              .withColumnRenamed("batch_rank", "claim_rank")
@@ -435,6 +435,8 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     f_rels = submit(tio.write, "rels", rels, iteration)
 
     # ---- node rows (U1-U4, C6-C8, S9) ----------------------------------
+    # category/tags come from the extract pass, computed there over the
+    # same masked title/description/keywords as below
     meta = (extracted.filter(F.col("link_pos") == -1)
             .join(F.broadcast(binfo), "domain_name", "left"))
     vis = F.col("robots_ok") & F.col("fetch_ok")      # metadata needs robots
@@ -445,15 +447,8 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     meta = meta.select(
         "domain_name", "batch_rank",
         title.alias("title"), desc.alias("description"),
-        favicon.alias("favicon_url"), kw.alias("meta_keywords"))
-    meta = (meta
-            .withColumn("_ct", classify_domain(F.col("title"),
-                                               F.col("description"),
-                                               F.col("domain_name"),
-                                               F.col("meta_keywords")))
-            .withColumn("category", F.col("_ct.category"))
-            .withColumn("tags", F.col("_ct.tags"))
-            .drop("_ct"))
+        favicon.alias("favicon_url"), kw.alias("meta_keywords"),
+        "category", "tags")
 
     if inputs.enrich_enabled:
         meta = enrich_batch(meta, inputs.whois, inputs.dns, inputs.ssl,

@@ -9,8 +9,9 @@ private-section entries the reference's UGC patterns care about:
 github.io, wordpress.com, itch.io) and implement the PSL longest-match
 algorithm (https://publicsuffix.org/list/ — public spec).
 
-Pure Python, shared verbatim by the Spark pandas UDF
-(functions/classify.py) and the sequential oracle (oracle/pyref.py).
+Pure Python, shared verbatim by the crawl's extract pass
+(functions/extract.py), the Spark pandas UDF (functions/classify.py) and
+the sequential oracle (oracle/pyref.py).
 """
 
 from __future__ import annotations

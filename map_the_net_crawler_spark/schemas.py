@@ -148,7 +148,8 @@ GEO = T.StructType([
 ])
 
 # Rows emitted by the extract UDF (functions/extract.py): page-level
-# metadata once per fetched page (link_pos = -1) plus one row per <a href>.
+# metadata once per fetched page (link_pos = -1, with the node row's
+# category/tags) plus one row per <a href> (with its C4 is_sub flag).
 EXTRACTED = T.StructType([
     T.StructField("url", T.StringType(), False),             # root page url
     T.StructField("domain_name", T.StringType(), False),
@@ -169,4 +170,9 @@ EXTRACTED = T.StructType([
     T.StructField("n_query_params", T.IntegerType(), True),
     T.StructField("param_names", T.ArrayType(T.StringType()), True),
     T.StructField("clean_url", T.StringType(), True),
+    # Python-side rules fused into the same pass: C4 subdomain typing on
+    # link rows, C6-C7 category/tags (robots/fetch-masked) on metadata rows
+    T.StructField("is_sub", T.BooleanType(), True),
+    T.StructField("category", T.StringType(), True),
+    T.StructField("tags", T.ArrayType(T.StringType()), True),
 ])

@@ -182,6 +182,25 @@ def _file_stats(path: str, cols: list[str]) -> list[dict]:
     return out
 
 
+def empty_frame(spark: SparkSession,
+                schema: T.StructType | str) -> DataFrame:
+    """An empty frame with exactly ``schema`` (nullability included),
+    built JVM-side as an empty ``LocalRelation``.
+
+    ``spark.createDataFrame([], schema)`` is a Python-backed RDD in
+    classic PySpark: every query over it starts Python workers for a
+    ``parallelize`` stage, and the optimizer cannot tell it is empty.
+    An empty ``LocalRelation`` starts no job of its own, and
+    ``PropagateEmptyRelation`` prunes the joins and unions against it
+    at plan time.  ``schema`` is a StructType or a DDL string."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    jschema = spark._jsparkSession.parseDataType(schema.json())
+    jdf = spark._jsparkSession.createDataFrame(
+        spark._jvm.java.util.ArrayList(), jschema)
+    return DataFrame(jdf, spark)
+
+
 def bucket_of(key, num_buckets: int) -> Column:
     """Deterministic bucket id for a key column: pmod(xxhash64(key), B).
     Must be identical everywhere (writer, reader pruning, tests)."""
@@ -346,7 +365,7 @@ class TableIO:
         if v is None:
             if schema is None:
                 raise FileNotFoundError(f"table {name} has no snapshot and no schema")
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         path = self.snapshot_path(name, v)
         if schema is None:
             try:
@@ -620,7 +639,7 @@ class TableIO:
             dfs.append(self.spark.read.schema(schema).parquet(d)
                        .withColumn("_dv", F.lit(v)))
         if not dfs:
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         allv = dfs[0]
         for d in dfs[1:]:
             allv = allv.unionByName(d)
@@ -647,7 +666,7 @@ class TableIO:
         self.last_base_read = {"table": name, "buckets_total": total,
                                "paths": paths}
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     def _read_bucketed(self, name: str, schema: T.StructType | None,
@@ -764,7 +783,7 @@ class TableIO:
                 "files_total": total_files,
                 "delta_parts": len(man["deltas"])}
         base = (self.spark.read.schema(schema).parquet(*paths) if paths
-                else self.spark.createDataFrame([], schema))
+                else empty_frame(self.spark, schema))
         if not man["deltas"]:
             return base, info
         res = self._resolved_deltas(name, man["deltas"], schema)
@@ -854,7 +873,7 @@ class TableIO:
                                "buckets_total": len(man["buckets"]),
                                "paths": paths}
         base = (self.spark.read.schema(schema).parquet(*paths) if paths
-                else self.spark.createDataFrame([], schema))
+                else empty_frame(self.spark, schema))
         if not man["deltas"]:
             return base, info
         res = self._resolved_deltas(name, man["deltas"], schema, buckets)
@@ -1042,7 +1061,7 @@ class TableIO:
         if not paths:
             if schema is None:
                 raise FileNotFoundError(f"append table {name} has no partitions")
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         r = self.spark.read
         if schema is not None:
             r = r.schema(schema)

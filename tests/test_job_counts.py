@@ -4,7 +4,9 @@ Each crawl iteration runs a few dozen TableIO calls, so a job that one of
 them starts for bookkeeping (a distributed file listing, a parquet
 schema inference, a sizing count, a key collect) is paid dozens of
 times per iteration regardless of the batch size.  These tests count
-the jobs a call starts through its job group."""
+the jobs a call starts through its job group.  An empty read must stay
+in the JVM too: a Python-backed empty table starts Python workers in
+every query that touches it."""
 
 from __future__ import annotations
 
@@ -17,14 +19,15 @@ from pyspark.sql import functions as F
 
 from map_the_net_crawler_spark import schemas as S
 from map_the_net_crawler_spark.operators.frontier import DISCOVERY_TS_BASE
+from map_the_net_crawler_spark.plans.crawl import init_run
 from map_the_net_crawler_spark.storage import TableIO, bucket_of
 
 _GROUPS = itertools.count()
 
 
-def _job_stages(spark, fn) -> list[list[str]]:
+def _job_stage_ids(spark, fn) -> list[list[int]]:
     """Run ``fn`` under a fresh job group; return, per job it started,
-    the names of the job's stages (``"<action> at <call site>"``)."""
+    the ids of the job's stages."""
     sc = spark.sparkContext
     group = f"jobcount-{os.getpid()}-{next(_GROUPS)}"
     sc.setJobGroup(group, group)
@@ -35,11 +38,31 @@ def _job_stages(spark, fn) -> list[list[str]]:
     # job events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     st = sc.statusTracker()
-    out = []
-    for jid in sorted(st.getJobIdsForGroup(group)):
-        info = st.getJobInfo(jid)
-        out.append([st.getStageInfo(s).name for s in info.stageIds
-                    if st.getStageInfo(s) is not None])
+    return [list(st.getJobInfo(jid).stageIds)
+            for jid in sorted(st.getJobIdsForGroup(group))]
+
+
+def _job_stages(spark, fn) -> list[list[str]]:
+    """Per job ``fn`` started, the names of the job's stages
+    (``"<action> at <call site>"``)."""
+    st = spark.sparkContext.statusTracker()
+    return [[st.getStageInfo(s).name for s in ids
+             if st.getStageInfo(s) is not None]
+            for ids in _job_stage_ids(spark, fn)]
+
+
+def _stage_rdd_ops(spark, stage_id: int) -> set[str]:
+    """The RDD operation scopes and RDD class names in a stage's
+    operation graph (``parallelize``, ``PythonRDD``, ``Exchange``, …)."""
+    graph = spark.sparkContext._jsc.sc().statusStore() \
+        .operationGraphForStage(stage_id)
+    out, todo = set(), [graph.rootCluster()]
+    while todo:
+        cl = todo.pop()
+        out.add(cl.name())
+        nodes, subs = cl.childNodes(), cl.childClusters()
+        out.update(nodes.apply(i).name() for i in range(nodes.size()))
+        todo.extend(subs.apply(i) for i in range(subs.size()))
     return out
 
 
@@ -166,3 +189,92 @@ class TestNoFixedJobs:
         assert set(man["buckets"].values()) == {2}
         assert sorted(map(tuple, tio.read_state(
             "frontier", version=2, schema=S.FRONTIER).collect())) == before
+
+
+def _metrics_row(spark):
+    return spark.range(1).select(
+        F.lit(3).alias("iteration"), F.lit("d0.com").alias("domain_name"),
+        F.lit("http://d0.com").alias("url"),
+        F.lit("completed").alias("status"),
+        F.lit(0).alias("relationships_found"),
+        F.lit(0).alias("urls_discovered"),
+        F.lit(None).cast("string").alias("error_message"),
+        F.lit(0.001).cast("decimal(10,3)").alias("processing_time"),
+        F.lit("spark-engine").alias("agent_name"))
+
+
+class TestEmptyReads:
+    """Every read that finds no data returns an empty ``LocalRelation``
+    with the table's exact schema.  A join against it starts no job
+    with a ``parallelize`` stage (a Python-backed local table), and the
+    optimizer can prune the join."""
+
+    def _check(self, spark, df, schema):
+        assert df.schema == schema      # nullability included
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation <empty>"), plan
+        probe = spark.range(5).select(
+            F.concat(F.lit("d"), F.col("id"), F.lit(".com"))
+            .alias("domain_name"))
+        jobs = _job_stage_ids(spark, lambda: probe.join(
+            df, "domain_name", "left").collect())
+        ops = [_stage_rdd_ops(spark, s) for ids in jobs for s in ids]
+        assert ops, "the probe side runs"
+        assert not [o for o in ops if {"parallelize", "PythonRDD"} & o], ops
+
+    def test_version0_state_read(self, spark):
+        tio = TableIO(tempfile.mkdtemp(prefix="mtn_empty_"), spark,
+                      num_buckets=8)
+        init_run(spark, tio, _frontier(spark, 20))
+        self._check(spark, tio.read_state("seen", version=0,
+                                          schema=S.SEEN), S.SEEN)
+
+    def test_keyed_read_matching_no_file(self, spark):
+        tio = _store(spark)
+        seen = _frontier(spark, 3_000).select(
+            "url", "domain_name", F.lit("success").alias("status"),
+            F.lit(1).alias("links_found"),
+            F.lit(0).alias("processed_iteration"))
+        tio.write("seen", seen, 0)
+        # sorts after every dN.com: outside each file's key range
+        view, io = tio.read_keyed_state("seen", 0, keys=["zzz.example"],
+                                        schema=S.SEEN)
+        assert io["pruned"] and io["files_opened"] == 0, io
+        self._check(spark, view, S.SEEN)
+
+    def test_unwritten_append_table(self, spark):
+        tio = TableIO(tempfile.mkdtemp(prefix="mtn_empty_"), spark)
+        self._check(spark, tio.read("metrics", S.METRICS), S.METRICS)
+        # a version before the first partition reads empty as well
+        tio.append_partition("metrics", _metrics_row(spark), 3)
+        self._check(spark, tio.read("metrics", S.METRICS, version=2),
+                    S.METRICS)
+
+
+def test_package_builds_no_python_local_tables():
+    """``createDataFrame`` over a Python list literal is a Python-backed
+    RDD: each query over it starts Python workers.  The package builds
+    empty frames with ``storage.empty_frame`` and small constant tables
+    as JVM-side Columns, so no call of that shape may come back."""
+    import ast
+
+    import map_the_net_crawler_spark as pkg
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "createDataFrame"
+                        and node.args
+                        and isinstance(node.args[0],
+                                       (ast.List, ast.ListComp, ast.Tuple))):
+                    offenders.append(
+                        f"{os.path.relpath(path, root)}:{node.lineno}")
+    assert offenders == [], offenders

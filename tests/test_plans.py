@@ -215,3 +215,53 @@ class TestBoundedBroadcasts:
         out = enrich_batch(batch, whois, dns, ssl, geo, nodes)
         self._assert_bounded(plan_of(out), "Scan parquet")
 
+
+
+class TestPythonStages:
+    """One Python pass per crawled page: in a crawl iteration only the
+    robots gate (the claim snapshot ``gated``) and the extract pass run
+    Python.  The link pipeline (``rels``) and the node rows
+    (``nodes_batch``) read the extract snapshot's ``is_sub`` and
+    ``category``/``tags`` columns instead of re-entering Python."""
+
+    PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                    "PythonUDF")
+
+    def test_only_gates_and_extract_run_python(self, spark, fixture_paths,
+                                               tmp_path):
+        from map_the_net_crawler_spark import schemas as S
+        from map_the_net_crawler_spark.config import CrawlConfig
+        from map_the_net_crawler_spark.plans.crawl import init_run
+        from map_the_net_crawler_spark.plans.iteration import (
+            CrawlInputs, run_iteration)
+        from map_the_net_crawler_spark.storage import TableIO
+        tio = TableIO(str(tmp_path / "run"), spark)
+        init_run(spark, tio,
+                 spark.read.parquet(fixture_paths["frontier_seed"]))
+        plans: dict[str, str] = {}
+
+        def tap(method):
+            orig = getattr(tio, method)
+
+            def w(name, df, *a):
+                plans[name] = df._jdf.queryExecution().toString()
+                return orig(name, df, *a)
+            setattr(tio, method, w)
+
+        for m in ("write", "merge_state", "append_partition"):
+            tap(m)
+        fx = fixture_paths
+        inputs = CrawlInputs(
+            pages=spark.read.parquet(fx["pages"]),
+            robots=spark.read.parquet(fx["robots"]),
+            redirects=spark.read.schema(S.REDIRECTS).parquet(fx["redirects"]),
+            whois=spark.read.parquet(fx["whois"]),
+            dns=spark.read.parquet(fx["dns"]),
+            ssl=spark.read.parquet(fx["ssl"]),
+            geo=spark.read.parquet(fx["geo"]))
+        res = run_iteration(spark, tio, inputs, CrawlConfig(), 1, 0)
+        assert res.processed > 0
+        assert {"rels", "nodes_batch"} <= set(plans)
+        python = {name for name, plan in plans.items()
+                  if any(n in plan for n in self.PYTHON_NODES)}
+        assert python == {"gated", "extract"}, python

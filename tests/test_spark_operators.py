@@ -155,6 +155,38 @@ class TestGlobalSequence:
         assert small == ranged
         assert sorted(small.values()) == list(range(100, 100 + 997))
 
+    def test_ranged_path_runs_no_python_table(self, spark):
+        """The two-phase path's per-partition offsets ride the plan as a
+        literal map: no Python-backed local table (``ExistingRDD``) and
+        no broadcast join, with the window path's mapping."""
+        from map_the_net_crawler_spark.operators.frontier import \
+            assign_global_sequence
+        n = 997
+        df = spark.range(n).select(
+            F.concat(F.lit("http://d"), F.col("id") % 37, F.lit(".com/p"),
+                     F.col("id")).alias("clean_url"),
+            (F.col("id") % 11).cast("int").alias("source_rank"),
+            (F.col("id") % 2 == 1).alias("is_internal"),
+            (F.col("id") % 53).cast("int").alias("link_pos")) \
+            .repartition(7)
+        order = [F.col("source_rank").asc(), F.col("is_internal").desc(),
+                 F.col("link_pos").asc(), F.col("clean_url").asc()]
+        ranged = assign_global_sequence(df, order, 100, small_threshold=1)
+        plans = ranged._jdf.queryExecution().toString()
+        assert "ExistingRDD" not in plans and "LogicalRDD" not in plans
+        assert "BroadcastExchange" not in plans
+        small = assign_global_sequence(df, order, 100,
+                                       small_threshold=10**9)
+        got = {r.clean_url: r.discovery_seq for r in ranged.collect()}
+        assert got == {r.clean_url: r.discovery_seq
+                       for r in small.collect()}
+        assert sorted(got.values()) == list(range(100, 100 + n))
+        # an upper-bound hint over an empty input takes the ranged path
+        # with no offsets at all
+        empty = assign_global_sequence(df.limit(0), order, 100,
+                                       small_threshold=1, rows_hint=n)
+        assert empty.collect() == []
+
     def test_rows_hint_skips_count_same_mapping(self, spark):
         """rows_hint (an upper bound) must give the identical mapping as
         the exact-count plan pick on both sides of the threshold."""
@@ -291,6 +323,82 @@ class TestFusedLinkFilter:
                for r in links.filter(fused).collect()}
         assert got == want
         assert len(want) > 0
+
+
+class TestFusedExtractColumns:
+    """The extract pass computes C4 ``is_sub`` and the node row's
+    ``category``/``tags`` in Python.  They must equal the Column
+    statements of the same rules (classify.is_subdomain_rel over the
+    psl_extract parts, category_col/tags_col over the robots- and
+    fetch-masked inputs), so moving them into the pass cannot change
+    the crawl's edges or nodes."""
+
+    def _extracted(self, spark, committed_fixdir):
+        pages = spark.read.parquet(f"{committed_fixdir}/pages.parquet")
+        fetched = pages.select(
+            "url",
+            F.regexp_replace("url", "^http://", "").alias("domain_name"),
+            "html",
+            (F.pmod(F.xxhash64("url"), F.lit(2)) == 0).alias("robots_ok"))
+        # a page absent from the snapshot: fetch_ok = false
+        fetched = fetched.unionByName(spark.range(1).select(
+            F.lit("http://gone.example").alias("url"),
+            F.lit("gone.example").alias("domain_name"),
+            F.lit(None).cast("binary").alias("html"),
+            F.lit(True).alias("robots_ok")))
+        return fetched, extract_pages(fetched)
+
+    def test_is_sub_equals_psl_column_predicate(self, spark,
+                                                committed_fixdir):
+        from map_the_net_crawler_spark.functions import classify as C
+        _, ex = self._extracted(spark, committed_fixdir)
+        links = ex.filter(F.col("link_pos") >= 0).select(
+            "domain_name", "link_pos", "target_domain", "is_sub",
+            C.psl_extract(F.col("domain_name")).alias("s"),
+            C.psl_extract(F.col("target_domain")).alias("t"))
+        want = C.is_subdomain_rel(
+            F.col("s.subdomain"), F.col("s.domain"), F.col("s.suffix"),
+            F.col("t.subdomain"), F.col("t.domain"), F.col("t.suffix"))
+        rows = links.select("is_sub", want.alias("want")).collect()
+        assert rows
+        assert all(r.is_sub == r.want for r in rows)
+        assert any(r.is_sub for r in rows)
+
+    def test_category_tags_equal_columns(self, spark, committed_fixdir):
+        from map_the_net_crawler_spark.functions import classify as C
+        fetched, ex = self._extracted(spark, committed_fixdir)
+        meta = (ex.filter(F.col("link_pos") == -1)
+                .join(fetched.select("url", "robots_ok"), "url"))
+        vis = F.col("robots_ok") & F.col("fetch_ok")
+        cat = C.category_col(F.when(vis, F.col("title")),
+                             F.when(vis, F.col("description")),
+                             F.col("domain_name"))
+        tags = C.tags_col(F.when(F.col("fetch_ok"), F.col("meta_keywords")),
+                          F.col("domain_name"), cat)
+        # the 44-branch CASE compiles for minutes under whole-stage
+        # codegen; interpreted evaluation gives the same values
+        old = spark.conf.get("spark.sql.codegen.wholeStage")
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        try:
+            rows = meta.select("robots_ok", "fetch_ok", "category", "tags",
+                               cat.alias("want_cat"),
+                               tags.alias("want_tags")).collect()
+        finally:
+            spark.conf.set("spark.sql.codegen.wholeStage", old)
+        assert {(r.robots_ok, r.fetch_ok) for r in rows} >= {
+            (True, True), (False, True), (True, False)}
+        for r in rows:
+            assert (r.category, r.tags) == (r.want_cat, r.want_tags), r
+
+    def test_default_robots_ok_is_true(self, spark, committed_fixdir):
+        fetched, _ = self._extracted(spark, committed_fixdir)
+        allowed = fetched.withColumn("robots_ok", F.lit(True))
+        key = ["url", "link_pos"]
+        got = sorted(map(tuple, extract_pages(allowed.drop("robots_ok"))
+                         .select(*key, "category", "tags").collect()))
+        want = sorted(map(tuple, extract_pages(allowed)
+                          .select(*key, "category", "tags").collect()))
+        assert got == want
 
 
 class TestIsinLiterals:
