@@ -515,7 +515,8 @@ def q_word_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidates (rows-only: xxhash64-based)."""
+    """MinHash+LSH near-dup candidates (md5 double hashing; DuckDB
+    oracle `_sql_minhash_lsh`)."""
     from map_the_net_crawler_spark.operators.dedup import minhash_lsh_pairs
     docs = _sf(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return minhash_lsh_pairs(docs, n_hashes=16, bands=8, shingle_n=2,
@@ -523,7 +524,8 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup candidates (rows-only: xxhash64-based)."""
+    """SimHash near-dup candidates (md5 shingle hashes; DuckDB oracle
+    `_sql_simhash`)."""
     from map_the_net_crawler_spark.operators.dedup import simhash_dedup
     docs = _sf(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return simhash_dedup(docs).filter(F.col("hamming") <= 16)
@@ -924,8 +926,10 @@ def _sql_rules() -> tuple[str, str, str]:
 # SAME Python source the Spark operators use (rules.py, similarity
 # hyperplanes, psl rules), so the two sides cannot drift. ----------------
 
+# dedup.normalize_text's Java \s also matches \x0b (vertical tab);
+# RE2's \s does not, so the class names it
 _SQL_NORM_WORDS = ("list_filter(string_split(lower(trim(regexp_replace("
-                   "coalesce(text, ''), '\\s+', ' ', 'g'))), ' '), "
+                   "coalesce(text, ''), '[\\s\\v]+', ' ', 'g'))), ' '), "
                    "w -> w <> '')")
 
 

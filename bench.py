@@ -153,11 +153,14 @@ def timed(fn):
 
 def bench_canary(spark, sf_dir: str) -> float:
     """Fixed-work canary (BENCH.md noise protocol, promoted into the
-    harness per VERDICT r3 item 10): the same minhash job, unchanged
-    across rounds, run before AND after the bench.  If the two readings
-    disagree wildly, or sit far above the documented quiet-host value
-    (BENCH.md), the run was noise-contaminated and should be re-taken —
-    the artifact carries its own adjudication."""
+    harness per VERDICT r3 item 10): the same minhash job run before AND
+    after the bench.  If the two readings disagree wildly, or sit far
+    above the documented quiet-host value (BENCH.md), the run was
+    noise-contaminated and should be re-taken — the artifact carries its
+    own adjudication.  Its work changed once: since ``minhash_lsh_pairs``
+    shingles each document in one Arrow pass, the quiet reading at
+    local[4] is ~1.5-2.2 s (it was ~3.7-5.1 s), so compare a reading
+    only with the BENCH.md reference for the same code."""
     from pyspark.sql import functions as F
 
     from map_the_net_crawler_spark.operators.dedup import minhash_lsh_pairs

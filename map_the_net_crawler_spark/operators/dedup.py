@@ -4,14 +4,15 @@ Five dedup families over ``documents(doc_id, text, ...)``, each designed
 for the 100 TB shape (hash-partitioned group-bys, band-bucketed joins —
 never an all-pairs comparison):
 
-- exact_dedup:         md5/xxhash group-by, keep min doc_id.
-- minhash_lsh_dedup:   shingle → minhash (k permutations, JVM-side
-                       xxhash64 with per-permutation seeds) → band
-                       buckets → candidate pairs via bucket self-join →
-                       verified Jaccard.
-- simhash_dedup:       64-bit simhash over shingle hashes via bit-vote
-                       aggregation in Column space; near-dups = equal
-                       simhash bands (Hamming blocking).
+- exact_dedup:         md5 of the normalized text, keep min doc_id.
+- minhash_lsh_pairs:   JVM-side normalized words → one Arrow kernel per
+                       document (shingles, one md5 each, Kirsch–
+                       Mitzenmacher double-hashed minima, band keys,
+                       64-bit shingle hashes) → candidate pairs via
+                       bucket self-join → verified Jaccard.
+- simhash_dedup:       60-bit simhash over md5 shingle hashes via
+                       bit-vote aggregation in Column space; near-dups
+                       = equal simhash bands (Hamming blocking).
 - ngram_jaccard_pairs: exact n-gram Jaccard on candidate pairs.
 - embedding near-dup:  see similarity.py (cosine top-k).
 
@@ -22,6 +23,10 @@ the self-join from going quadratic — the standard LSH guard.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -57,18 +62,22 @@ def spread_small(df: DataFrame) -> DataFrame:
     default parallelism before a compute-heavy stage.
 
     A small single-file parquet scan (one row group) plans as 1-2 input
-    partitions, serializing the shingle/md5 work on one or two cores
+    partitions, serializing the per-row kernel on one or two cores
     (guide §2.5 input skew / §6 input split size); the repartition moves
     only the projected columns, so the exchange is tiny.  No-op when the
     input already has at least defaultParallelism partitions — at real
     scale the scan has far more splits and nothing is shuffled.
 
-    CALLER CONTRACT: pass a scan-rooted projection (no joins/aggregates
-    upstream).  The partition probe materializes the RDD plan, and with
-    AQE that EXECUTES any exchange stages the frame contains — for a
-    pure scan there are none, so the probe is free."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
+    Only a scan-rooted input (a leaf scan under projects and filters in
+    the optimized plan) is probed: the probe materializes the RDD plan,
+    and with AQE that EXECUTES any exchange stage a joined, aggregated
+    or cached frame holds.  Any other input is returned unchanged."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.children().apply(0)
+    if not node.children().isEmpty() or node.nodeName() == "InMemoryRelation":
+        return df
+    p = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= p:
         return df
     return df.repartition(p)
@@ -87,9 +96,14 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
                     (F.col("doc_id") == F.col("min_doc_id")).alias("is_survivor")))
 
 
+def _words(text) -> "F.Column":
+    """The normalized text's words (no empty strings)."""
+    return F.filter(F.split(normalize_text(text), " "), lambda w: w != "")
+
+
 def shingles_col(text, n: int = 3):
     """Word n-gram shingles of the normalized text (distinct)."""
-    words = F.filter(F.split(normalize_text(text), " "), lambda w: w != "")
+    words = _words(text)
     k = F.size(words) - (n - 1)
     # sequence(1, 0) would yield a DESCENDING [1, 0] — guard short docs
     idx = F.when(k >= 1, F.sequence(F.lit(1), k)) \
@@ -101,38 +115,48 @@ def shingles_col(text, n: int = 3):
 # Kirsch–Mitzenmacher double hashing for minhash permutations: ONE md5
 # per shingle, split into two 40-bit halves (hex chars 1-10 / 11-20),
 # permutation p = (h1 + p·h2) mod PRIME.  40-bit halves keep
-# h1 + 31·h2 < 2^46 — far from BIGINT overflow, so Spark long and
+# h1 + 31·h2 < 2^46 — far from BIGINT overflow, so numpy int64 and
 # DuckDB UBIGINT arithmetic agree bit-for-bit.  md5 is the one hash both
 # engines share, which is what makes the DuckDB oracle reproducible.
 MINHASH_PRIME = (1 << 40) - 87  # largest prime below 2^40
 
 
-def minhash_signature(docs: DataFrame, text_col: str = "text",
-                      n_hashes: int = 32, shingle_n: int = 3) -> DataFrame:
-    """(doc_id, sig array<bigint>): sig[p] = min over shingles of
-    (h1 + p·h2) mod MINHASH_PRIME with (h1, h2) the two 40-bit md5
-    halves of the shingle.  All JVM-side: ONE md5 per shingle → explode
-    → groupBy(doc) with n_hashes min aggs — one shuffle keyed by doc_id
-    (round-1 used one md5 per (shingle, permutation): 32× the hashing)."""
-    h1 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 10), 16, 10) \
-          .cast("long")
-    h2 = F.conv(F.substring(F.md5(F.col("shingle")), 11, 10), 16, 10) \
-          .cast("long")
-    # project to the two needed columns BEFORE the spread so the
-    # round-robin exchange ships only (doc_id, text) — guide §2.3
-    sh = spread_small(docs.select("doc_id",
-                                  F.col(text_col).alias("_mh_text"))) \
-        .select("doc_id",
-                F.explode(shingles_col(F.col("_mh_text"), shingle_n))
-                .alias("shingle")) \
-        .select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    aggs = [F.min((F.col("h1") + F.lit(p) * F.col("h2"))
-                  % F.lit(MINHASH_PRIME)).alias(f"h{p}")
-            for p in range(n_hashes)]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    return sig.select("doc_id",
-                      F.array(*[F.col(f"h{p}") for p in range(n_hashes)])
-                      .alias("sig"))
+def _minhash_kernel(n_hashes: int, bands: int, shingle_n: int):
+    """``mapInPandas`` kernel (doc_id, words) → (doc_id, buckets, sh): per
+    document, one md5 per distinct ``shingle_n``-gram, the ``n_hashes``
+    minima, the ``bands`` keys md5("v0,v1,…") and, for the Jaccard
+    verify, each shingle's md5 cut to its first 8 bytes (signed).  A
+    document with no shingle emits no row."""
+    p = np.arange(n_hashes, dtype=np.int64)
+    rows = n_hashes // bands
+    # big-endian byte weights: bytes 0-4 of the digest are hex 1-10
+    w40 = np.array([1 << (8 * i) for i in range(4, -1, -1)], dtype=np.int64)
+
+    def sign(batches):
+        for pdf in batches:
+            ids, buckets, sh = [], [], []
+            for doc_id, words in zip(pdf["doc_id"], pdf["words"]):
+                ws = words.tolist()
+                grams = dict.fromkeys(" ".join(ws[i:i + shingle_n])
+                                      for i in range(len(ws) - shingle_n + 1))
+                if not grams:
+                    continue
+                digest = b"".join(hashlib.md5(g.encode()).digest()
+                                  for g in grams)
+                d = np.frombuffer(digest, np.uint8).reshape(-1, 16)
+                h1, h2 = d[:, 0:5] @ w40, d[:, 5:10] @ w40
+                sig = ((h1[:, None] + p * h2[:, None]) % MINHASH_PRIME) \
+                    .min(axis=0).tolist()
+                ids.append(doc_id)
+                buckets.append([hashlib.md5(",".join(
+                    map(str, sig[b * rows:(b + 1) * rows])).encode())
+                    .hexdigest() for b in range(bands)])
+                sh.append(np.frombuffer(digest, ">i8")[::2].astype(np.int64))
+            if ids:
+                yield pd.DataFrame({"doc_id": ids, "buckets": buckets,
+                                    "sh": sh})
+
+    return sign
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
@@ -140,35 +164,32 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                       shingle_n: int = 3, jaccard_threshold: float = 0.5,
                       max_bucket: int = 1000) -> DataFrame:
     """Candidate near-dup pairs via banded minhash, verified with exact
-    shingle Jaccard.  Returns (doc_a, doc_b, jaccard) with doc_a < doc_b."""
-    rows_per_band = n_hashes // bands
-    sig = minhash_signature(docs, text_col, n_hashes, shingle_n)
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*[
-            F.md5(F.concat_ws(
-                ",", *[F.col("sig")[b * rows_per_band + r].cast("string")
-                       for r in range(rows_per_band)]))
-            for b in range(bands)])).alias("band", "bucket"))
+    shingle Jaccard.  Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    Words are normalized JVM-side (``_words``, as the DuckDB oracle
+    does); each document then crosses into Python once."""
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    # project to the two needed columns BEFORE the spread so the
+    # round-robin exchange ships only (doc_id, text) — guide §2.3
+    signed = spread_small(docs.select("doc_id",
+                                      F.col(text_col).alias("_mh_text"))) \
+        .select("doc_id", _words(F.col("_mh_text")).alias("words")) \
+        .mapInPandas(_minhash_kernel(n_hashes, bands, shingle_n),
+                     f"doc_id {id_type}, buckets array<string>, "
+                     "sh array<bigint>")
+    # materialize the per-document proxy ONCE: the band self-join and
+    # both verify joins read it, and each would re-run the scan and the
+    # kernel otherwise (guide §8).  localCheckpoint is non-reliable: an
+    # executor loss fails the query and the caller re-runs it from the
+    # deterministic inputs (a reliable one needs a checkpoint dir).
+    signed = signed.localCheckpoint()
+    banded = signed.select("doc_id", F.posexplode("buckets")
+                           .alias("band", "bucket"))
     # bound hot buckets (boilerplate) before the self-join — a window
-    # over (band, bucket) instead of the old groupBy + join-back: same
-    # counts, one shuffle of the banded rows instead of three
+    # over (band, bucket): one shuffle of the banded rows
     # (guide §2.4: two operations keyed the same way share one exchange)
     w_bucket = Window.partitionBy("band", "bucket")
     banded = (banded.withColumn("_bsz", F.count("*").over(w_bucket))
               .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
-    # materialize the (small) banded proxy ONCE: without it, each side
-    # of the self-join below re-executes the entire scan → shingle → md5
-    # → signature pipeline (4 full corpus passes in the round-5 plan —
-    # guide §8: decide on a lightweight proxy, computed once).  The
-    # proxy is O(docs × bands) ids+hashes, ~40 bytes/row — orders of
-    # magnitude smaller than the text it derives from.  localCheckpoint
-    # is non-reliable storage: an executor loss fails the query and the
-    # caller re-runs it from the deterministic inputs — the standard
-    # batch-dedup trade (a reliable checkpoint would need a configured
-    # checkpoint dir; a scratch-table write is the alternative if a
-    # deployment needs mid-query fault tolerance).
-    banded = banded.localCheckpoint()
     a = banded.select(F.col("band"), F.col("bucket"),
                       F.col("doc_id").alias("doc_a"))
     b = banded.select(F.col("band"), F.col("bucket"),
@@ -176,45 +197,14 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     cand = (a.join(b, ["band", "bucket"])
             .filter(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
-    # candidate pairs are few (band collisions, hot buckets capped);
-    # materialize them so the verify stage can prune the corpus to
-    # candidate docs only and the id/pair frames are cheap re-scans
-    cand = cand.localCheckpoint()
-    # verify with exact Jaccard over shingle sets — shingles hashed to
-    # int64 (xxhash64) BEFORE the join: the pair-join payload shrinks
-    # ~10× vs shipping raw n-gram strings and array_intersect on longs
-    # is far cheaper (round-1 bench: 123 s → the string-array verify was
-    # the bottleneck).  Intersection/union COUNTS are identical modulo
-    # 2^-64 hash collisions; the DuckDB oracle computes the same counts
-    # on the raw string sets.
-    #
-    # Only CANDIDATE docs pay the verify shingle pass: the join below
-    # can only keep doc_ids present in cand, so semi-joining docs to the
-    # candidate id set first is result-identical and turns the verify
-    # from two full-corpus shingle passes into two candidate-only ones.
-    ids = (cand.select(F.col("doc_a").alias("doc_id"))
-           .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-           .distinct())
-    # both counts are tiny jobs over the checkpointed pairs; the PAIR
-    # count gates the pair-side broadcast separately — hot buckets can
-    # make pairs orders of magnitude more numerous than distinct ids
-    n_ids = ids.count()
-    n_cand = cand.count()
-    id_side = F.broadcast(ids) if n_ids <= 2_000_000 else ids
-    # spread the scan-rooted projection FIRST, then semi-join: identical
-    # rows, and the partition probe never sees (hence never pre-executes)
-    # the join's exchange stages
-    sh = spread_small(docs.select("doc_id",
-                                  F.col(text_col).alias("_mh_text"))) \
-        .join(id_side, "doc_id", "left_semi") \
-        .select("doc_id",
-                F.transform(shingles_col(F.col("_mh_text"), shingle_n),
-                            lambda s: F.xxhash64(s)).alias("shingles"))
-    cand = (F.broadcast(cand) if n_cand <= 2_000_000 else cand) \
-        .join(sh.select(F.col("doc_id").alias("doc_a"),
-                        F.col("shingles").alias("sh_a")), "doc_a") \
-        .join(sh.select(F.col("doc_id").alias("doc_b"),
-                        F.col("shingles").alias("sh_b")), "doc_b")
+    # exact Jaccard over the 64-bit shingle hashes: the counts equal
+    # those of the string sets modulo 2^-64 collisions; AQE picks the
+    # join sides from the checkpoint's real sizes
+    cand = cand \
+        .join(signed.select(F.col("doc_id").alias("doc_a"),
+                            F.col("sh").alias("sh_a")), "doc_a") \
+        .join(signed.select(F.col("doc_id").alias("doc_b"),
+                            F.col("sh").alias("sh_b")), "doc_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))

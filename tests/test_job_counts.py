@@ -278,3 +278,54 @@ def test_package_builds_no_python_local_tables():
                     offenders.append(
                         f"{os.path.relpath(path, root)}:{node.lineno}")
     assert offenders == [], offenders
+
+
+class TestDedupJobs:
+    """``spread_small`` probes only scan-rooted inputs, and
+    ``minhash_lsh_pairs`` runs its Python kernel once per document."""
+
+    def _docs(self, spark):
+        d = os.path.join(tempfile.mkdtemp(prefix="mtn_docs_"), "docs")
+        spark.range(300).select(
+            "id", F.concat_ws(" ", F.lit("w"), F.pmod("id", F.lit(7)),
+                              F.lit("a b c d e f"), F.pmod("id", F.lit(3)))
+            .alias("text")).withColumnRenamed("id", "doc_id") \
+            .coalesce(1).write.parquet(d)
+        return spark.read.parquet(d)
+
+    def test_spread_small_leaves_joined_and_aggregated_input(self, spark):
+        from map_the_net_crawler_spark.operators.dedup import spread_small
+        docs = self._docs(spark)
+        joined = docs.join(docs.select("doc_id"), "doc_id")
+        aggregated = docs.groupBy("text").count()
+        for df in (joined, aggregated):
+            got = []
+            assert _job_stages(spark, lambda: got.append(
+                spread_small(df))) == []
+            assert got[0] is df
+        # a single-file scan is still spread across the cores
+        spread = spread_small(docs.filter(F.col("doc_id") > 5))
+        plan = spread._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("Repartition"), plan
+
+    def test_minhash_signs_each_document_once(self, spark):
+        from map_the_net_crawler_spark.operators.dedup import \
+            minhash_lsh_pairs
+        docs = self._docs(spark)
+        got = []
+        call = _job_stage_ids(spark, lambda: got.append(minhash_lsh_pairs(
+            docs, n_hashes=16, bands=8, jaccard_threshold=0.1)))
+        st = spark.sparkContext.statusTracker()
+        names = [[st.getStageInfo(s).name for s in ids] for ids in call]
+        # the checkpoint is the only action: no count, no second
+        # checkpoint; at most the spread's exchange runs ahead of it as
+        # its own map-stage job
+        assert sum(n.startswith("localCheckpoint")
+                   for ns in names for n in ns) == 1, names
+        assert len(call) <= 2, names
+        rows = []
+        run = _job_stage_ids(spark, lambda: rows.extend(got[0].collect()))
+        assert rows
+        kernel = [s for ids in call + run for s in ids
+                  if {"MapInPandas", "PythonRDD"} & _stage_rdd_ops(spark, s)]
+        assert len(kernel) == 1, kernel

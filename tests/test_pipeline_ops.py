@@ -61,6 +61,57 @@ class TestDedup:
         assert (1, 3) in pairs            # near-dup caught by banding
         assert (1, 4) not in pairs
 
+    def test_minhash_matches_sql_restatement(self, spark):
+        """The Arrow kernel and the DuckDB oracle agree row for row,
+        jaccard included, on the normalization and banding edge cases;
+        a string doc_id keeps its type."""
+        import duckdb
+
+        import __spark_entry__ as E
+        base = "the quick brown fox jumps over the lazy dog near the river"
+        texts = [
+            None,                                   # null text
+            "", "short", "two words",               # fewer than 3 words
+            base,
+            base.replace("lazy", "sleepy"),
+            # every ASCII whitespace Java's \s matches, and space runs
+            "the\tquick\nbrown\x0bfox\fjumps\rover   the lazy dog near "
+            "the river",
+            "  THE Quick BROWN fox jumps over the lazy dog near the sea ",
+            # the shingle "a b c" repeats
+            "a b c a b c a b c a b c d e f",
+            "a b c a b c a b c x y z",
+            "Ünïcödé ÉCOLE Ñandú crème brûlée à la carte",
+            "ünïcödé école ñandú crème brûlée à la carte menu",
+        ] + ["boilerplate footer text shared by every page here"] * 5 + [
+            f"unrelated document number {i} about topic {i * 7} only"
+            for i in range(6)]
+        pdf = pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64),
+                            "text": texts})
+        con = duckdb.connect()
+        kw = dict(n_hashes=16, bands=8, shingle_n=3, max_bucket=4)
+
+        def both(frame, id_type="long"):
+            con.register("documents", frame)
+            want = con.sql(E._sql_minhash_lsh(
+                "true", thr=0.1, **kw)).fetchall()
+            got = minhash_lsh_pairs(
+                spark.createDataFrame(frame, f"doc_id {id_type}, text string"),
+                jaccard_threshold=0.1, **kw)
+            return got, sorted(map(tuple, got.collect())), sorted(want)
+
+        _, got, want = both(pdf)
+        assert got == want
+        # identical copies past max_bucket share no surviving bucket
+        assert not [r for r in got if r[0] >= 12 and r[1] < 17]
+        assert len(got) >= 6 and any(r[2] < 1.0 for r in got), got
+        ids = pdf.assign(doc_id=[f"d{i:02d}" for i in pdf["doc_id"]])
+        out, got, want = both(ids, "string")
+        assert got == want and len(got) >= 6
+        assert out.schema["doc_a"].dataType.simpleString() == "string"
+        _, got, want = both(pdf.iloc[:0])
+        assert got == want == []
+
     def test_simhash_near_dups_close(self, spark, docs):
         out = {(r.doc_a, r.doc_b): r.hamming
                for r in simhash_dedup(docs).collect()}
