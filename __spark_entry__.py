@@ -926,8 +926,9 @@ def _sql_rules() -> tuple[str, str, str]:
 # SAME Python source the Spark operators use (rules.py, similarity
 # hyperplanes, psl rules), so the two sides cannot drift. ----------------
 
-# dedup.normalize_text's Java \s also matches \x0b (vertical tab);
-# RE2's \s does not, so the class names it
+# Java's \s (the operators' regexes) also matches \x0b (vertical tab);
+# RE2's \s does not, so every oracle that restates a Java \s names the
+# class [\s\v]
 _SQL_NORM_WORDS = ("list_filter(string_split(lower(trim(regexp_replace("
                    "coalesce(text, ''), '[\\s\\v]+', ' ', 'g'))), ' '), "
                    "w -> w <> '')")
@@ -1185,8 +1186,8 @@ def _sql_whois_text() -> str:
 
 def _sql_lang_quality() -> str:
     from map_the_net_crawler_spark.functions.text import STOPWORDS
-    toks = ("list_filter(regexp_split_to_array(coalesce(text, ''), '\\s+'), "
-            "x -> x <> '')")
+    toks = ("list_filter(regexp_split_to_array(coalesce(text, ''), "
+            "'[\\s\\v]+'), x -> x <> '')")
     ratio = {}
     for lang, words in STOPWORDS.items():
         lst = "[" + ", ".join(f"'{w}'" for w in words) + "]"
@@ -1223,6 +1224,18 @@ def _sql_lang_quality() -> str:
                 ) / 4.0, 6) AS quality_score
         FROM m
     """
+
+
+def _sql_asn_fields(org: str) -> str:
+    """C14 asn / asn_description from the ipinfo org string ``org``."""
+    return f"""
+      CASE WHEN {org} = '' THEN NULL
+           WHEN trim({org}) = '' THEN NULL
+           ELSE list_filter(regexp_split_to_array({org}, '[\\s\\v]+'),
+                            x -> x <> '')[1] END AS asn,
+      CASE WHEN {org} = '' THEN ''
+           WHEN trim({org}) = '' THEN NULL
+           ELSE {org} END AS asn_description"""
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1626,7 +1639,7 @@ def oracle_sql() -> dict[str, str]:
         "q_dedup_exact": """
             WITH n AS (
               SELECT doc_id,
-                md5(lower(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g')))) AS content_hash
+                md5(lower(trim(regexp_replace(coalesce(text, ''), '[\\s\\v]+', ' ', 'g')))) AS content_hash
               FROM documents)
             SELECT doc_id, content_hash,
               count(*) OVER (PARTITION BY content_hash) AS group_size,
@@ -1635,8 +1648,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q_text_metrics": """
             WITH t AS (
-              SELECT doc_id, coalesce(text, '') AS txt,
-                list_filter(regexp_split_to_array(coalesce(text, ''), '\\s+'),
+              SELECT doc_id, text, coalesce(text, '') AS txt,
+                list_filter(regexp_split_to_array(coalesce(text, ''),
+                                                  '[\\s\\v]+'),
                             x -> x <> '') AS toks
               FROM documents)
             SELECT doc_id,
@@ -1648,14 +1662,14 @@ def oracle_sql() -> dict[str, str]:
               round(CASE WHEN length(txt) > 0 THEN
                 length(regexp_replace(txt, '[^.,;:!?''"()\\[\\]{}-]', '', 'g'))::double
                   / length(txt) ELSE 0.0 END, 6) AS punct_ratio,
-              length(txt) AS n_chars
+              length(text) AS n_chars
             FROM t
         """,
         "q_winnow_fingerprints": """
             WITH t AS (
               SELECT doc_id,
                 lower(trim(regexp_replace(coalesce(text, ''),
-                                          '\\s+', ' ', 'g'))) AS norm
+                                          '[\\s\\v]+', ' ', 'g'))) AS norm
               FROM documents WHERE doc_id < 100),
             g AS (
               SELECT doc_id,
@@ -1700,7 +1714,7 @@ def oracle_sql() -> dict[str, str]:
             WITH docs AS (
               SELECT doc_id,
                 list_distinct(list_filter(regexp_split_to_array(
-                  lower(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g'))),
+                  lower(trim(regexp_replace(coalesce(text, ''), '[\\s\\v]+', ' ', 'g'))),
                   ' '), x -> x <> '')) AS words
               FROM documents WHERE doc_id < 100)
             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1765,14 +1779,7 @@ def oracle_sql() -> dict[str, str]:
                      WHEN substring(md5(domain),1,1) < 'd' THEN ''
                      ELSE '   ' END AS org
               FROM read_parquet('{_FIX}/dns.parquet'))
-            SELECT domain, org,
-              CASE WHEN org = '' THEN NULL
-                   WHEN trim(org) = '' THEN NULL
-                   ELSE list_filter(regexp_split_to_array(org, '\\s+'),
-                                    x -> x <> '')[1] END AS asn,
-              CASE WHEN org = '' THEN ''
-                   WHEN trim(org) = '' THEN NULL
-                   ELSE org END AS asn_description
+            SELECT domain, org, {_sql_asn_fields("org")}
             FROM d
         """,
         "q_lang_quality": _sql_lang_quality(),

@@ -37,9 +37,14 @@ def claim_batch(frontier: DataFrame, cfg: CrawlConfig,
                 politeness_budget: int = 0, salt_buckets: int = 1) -> DataFrame:
     """Top-k claim with optional per-domain politeness budget.
 
-    politeness_budget > 0 caps URLs per domain per iteration (the
-    reference's request_delay sleep re-expressed as cardinality,
-    SURVEY.md §2.9).  salt_buckets > 1 splits each domain's rank window
+    politeness_budget > 0 caps URLs per domain per iteration.  The
+    reference's temporal politeness (``time.sleep(request_delay)`` per
+    URL per worker, ``domain_collector.py:1411-1412``) is re-expressed
+    as this cardinality budget: with an iteration wall target of W
+    seconds and a per-request delay of d seconds, at most floor(W / d)
+    URLs of one registrable domain may be claimed per iteration
+    (SURVEY.md §2.9).  The caller picks the budget; 0 is the faithful
+    claim mode.  salt_buckets > 1 splits each domain's rank window
     into deterministic sub-quotas of ceil(budget/salt) so one hub domain
     with millions of pending URLs cannot collapse the window into a
     single task (SURVEY.md §4.2 hub-domain skew); salt_buckets=1 is the

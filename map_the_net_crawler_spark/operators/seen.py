@@ -2,8 +2,8 @@
 
 URL-seen membership has one path: the exact left-anti join of the
 discovered URLs against the frontier url set in
-``frontier.merge_discoveries``.  At scale the frontier side of that join
-is bucket-pruned to the candidates' own buckets before the join
+``frontier.merge_discoveries``.  The frontier side of that join is
+bucket-pruned to the candidates' own buckets before the join
 (``plans.iteration``), so the probe reads only the buckets a candidate
 can live in.  The frontier table is the authoritative set; no
 probabilistic pre-filter stands in front of it.

@@ -35,13 +35,14 @@ from .. import schemas as S
 from ..config import CrawlConfig
 from ..functions.extract import extract_pages
 from ..functions.robots import make_robots_udf
-from ..operators.enrich import enrich_batch, isin_literals
+from ..operators.enrich import _naive_main, enrich_batch, isin_literals
 from ..operators.frontier import (apply_claim_gates, claim_batch,
                                   merge_discoveries)
 from ..operators.links import (build_relationships,
                                discoveries_from_relationships,
                                edges_from_relationships)
 from ..operators.seen import seen_counts_pruned
+from ..psl import naive_main_domain
 from ..storage import TableIO, bucket_of
 
 # snapshot the discovery anti-join survivors (fresh_links) only above
@@ -78,6 +79,11 @@ class IterationResult:
     # file-skipping telemetry from the stats-pruned claim read
     # ({'pruned', 'files_opened', 'files_total', 'delta_parts'})
     claim_io: dict | None = None
+    # the same telemetry from the keyed state reads, by read:
+    # 'seen_gate' (claim-domain quota gates), 'nodes_batch' (enrich +
+    # complete set), 'seen_targets' (link-target quota gates) and
+    # 'nodes_touched' (minimal node rows)
+    read_io: dict | None = None
 
 
 def _key_set(key: str, cond: Column | None, nb: int) -> Column:
@@ -184,11 +190,6 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # run meta (written last) is the single commit point, so a crash
     # mid-commit can never yield a mixed-version read
     base = iteration - 1
-    frontier = tio.read("frontier", S.FRONTIER, version=base)
-    seen = tio.read("seen", S.SEEN, version=base)
-    nodes = tio.read("nodes", S.NODES, version=base)
-    # edges needs no base read: its delta is merged incrementally inside
-    # TableIO.merge_state (bucketed: only the touched buckets are read)
 
     # ---- claim + gates, materialized as ONE snapshot: every downstream
     # stage (fetch, nodes, links, seen, frontier, metrics) re-reads this
@@ -198,25 +199,24 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # whose manifest footer stats can contribute to the pending top-k
     # are opened (storage.read_claim_candidates — the last O(corpus)
     # per-iteration read, VERDICT r4 item 1).  Politeness mode can claim
-    # arbitrarily deep per domain, so it keeps the full view (its scale
-    # fix is the shuffle-free local pre-filter inside claim_batch).
-    claim_view, claim_io = frontier, None
+    # arbitrarily deep per domain, so it reads the whole frontier (its
+    # scale fix is the shuffle-free local pre-filter inside claim_batch).
     if politeness_budget == 0:
         claim_view, claim_io = tio.read_claim_candidates(
             "frontier", base, cfg.max_items, schema=S.FRONTIER)
+    else:
+        claim_view = tio.read_state("frontier", base, schema=S.FRONTIER)
+        claim_io = None
     claimed = claim_batch(claim_view, cfg, politeness_budget, salt_buckets)
 
-    # ---- bucket-pruned state reads (the at-scale read path) ------------
-    # Every state-table read whose join keys are batch-bounded can open
-    # ONLY the owning buckets/files: seen for the quota gates (claim
-    # domains), nodes for enrich/complete (claim domains + registrable
-    # parents).  Bit-identical by construction — a key can only match
-    # rows in its own bucket.  The path activates when the saved scan
-    # plausibly outweighs its one extra write (the claim snapshot): a
-    # scale-sized bucket count (>= 64, the Iceberg sizing where bucket
-    # count ∝ corpus) or — at ANY bucket count — once the seen/nodes
-    # manifests report >= cfg.prune_reads_min_rows rows (so a long
-    # sandbox-bucketed run still stops scanning its whole history).
+    # ---- keyed state reads ----------------------------------------------
+    # Every state-table read joins on batch-bounded keys, so each opens
+    # ONLY the owning buckets/files: seen for the quota gates (claim and
+    # link-target domains), nodes for enrich/complete (claim domains +
+    # registrable parents) and the minimal rows (touched domains),
+    # frontier for the discovery anti-join (candidate urls).
+    # Bit-identical to a full scan by construction — a key can only
+    # match rows in its own bucket.
     #
     # The key→bucket maps these reads need are never collected by a
     # job of their own: each rides a write the iteration makes anyway,
@@ -225,42 +225,34 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # and candidate-url buckets).  An observed set may be a SUPERSET of
     # the keys the consumer joins on, which read_keyed_state allows.
     nb = tio.num_buckets
-    prune_reads = tio._is_bucketed("frontier") and (
-        nb >= 64
-        or max(tio.state_rows("seen", base) or 0,
-               tio.state_rows("nodes", base) or 0)
-        >= cfg.prune_reads_min_rows)
-    seen_gate_view, nodes_batch_view = seen, nodes
-    if prune_reads:
-        from ..operators.enrich import _naive_main
-        from ..psl import naive_main_domain
-        # snapshot the bare claim once so the gates re-read it instead
-        # of re-running the claim; the claim domains and their bucket
-        # ids ride the same write
-        obs_c = Observation()
-        tio.write("claimed", claimed.observe(
-            obs_c, F.collect_set(F.struct(
-                "domain_name",
-                bucket_of("domain_name", nb).alias("b"),
-                bucket_of(_naive_main(F.col("domain_name")), nb)
-                .alias("pb"))).alias("doms")), iteration)
-        claimed = tio.read("claimed", version=iteration)
-        drows = obs_c.get["doms"]
-        # registrable parents for the WHOIS-inheritance lookup, derived
-        # driver-side (Python twin of _naive_main, pinned by the
-        # q_naive_main_domain oracle) paired with the parent bucket ids
-        # observed on the same write — key→bucket maps let the keyed
-        # read skip whole buckets, not just files
-        seen_kb = {r["domain_name"]: r["b"] for r in drows}
-        nodes_kb = dict(seen_kb)
-        for r in drows:
-            nodes_kb[naive_main_domain(r["domain_name"])] = r["pb"]
-        seen_gate_view, _seen_io = tio.read_keyed_state(
-            "seen", base, keys=sorted(seen_kb),
-            key_buckets=seen_kb, schema=S.SEEN)
-        nodes_batch_view, _nodes_io = tio.read_keyed_state(
-            "nodes", base, keys=sorted(nodes_kb),
-            key_buckets=nodes_kb, schema=S.NODES)
+    # snapshot the bare claim once so the gates re-read it instead of
+    # re-running the claim; the claim domains and their bucket ids ride
+    # the same write
+    obs_c = Observation()
+    tio.write("claimed", claimed.observe(
+        obs_c, F.collect_set(F.struct(
+            "domain_name",
+            bucket_of("domain_name", nb).alias("b"),
+            bucket_of(_naive_main(F.col("domain_name")), nb)
+            .alias("pb"))).alias("doms")), iteration)
+    claimed = tio.read("claimed", version=iteration)
+    drows = obs_c.get["doms"]
+    # registrable parents for the WHOIS-inheritance lookup, derived
+    # driver-side (Python twin of _naive_main, pinned by the
+    # q_naive_main_domain oracle) paired with the parent bucket ids
+    # observed on the same write — key→bucket maps let the keyed read
+    # skip whole buckets, not just files
+    seen_kb = {r["domain_name"]: r["b"] for r in drows}
+    nodes_kb = dict(seen_kb)
+    for r in drows:
+        nodes_kb[naive_main_domain(r["domain_name"])] = r["pb"]
+    read_io = {}
+    seen_gate_view, read_io["seen_gate"] = tio.read_keyed_state(
+        "seen", base, keys=sorted(seen_kb),
+        key_buckets=seen_kb, schema=S.SEEN)
+    nodes_batch_view, read_io["nodes_batch"] = tio.read_keyed_state(
+        "nodes", base, keys=sorted(nodes_kb),
+        key_buckets=nodes_kb, schema=S.NODES)
 
     robots_udf = make_robots_udf(cfg.http_user_agent)
     domains = claimed.select("domain_name").distinct()
@@ -299,7 +291,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     tmr.lap("claim_count")
     if n_claimed == 0:
         return IterationResult(iteration, 0, 0, 0, 0, next_seq, tmr.laps,
-                               claim_io)
+                               claim_io, read_io)
     claimed = gated
     # batch key list for the literal-isin dim prunes (enrich / complete
     # set), observed on the gated write.  Guarded by the in-list
@@ -337,9 +329,9 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # processed-domain and link counts ride the extract WRITE: each batch
     # domain yields exactly one metadata row (link_pos == -1), so n_meta
-    # == countDistinct(domain) with gate_status='process'.  In prune mode
-    # the surviving links' target domains and their seen buckets ride it
-    # too (a superset of the robots-allowed targets the gates look up).
+    # == countDistinct(domain) with gate_status='process'.  The surviving
+    # links' target domains and their seen buckets ride it too (a
+    # superset of the robots-allowed targets the gates look up).
     obs_e = Observation()
     from ..operators.links import link_survives
     # F1-F10 link survival fused into the extract snapshot: ONE regex
@@ -351,21 +343,18 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # same Column filter_links applies (shared definition + pinned by
     # tests), so the fused column cannot drift from the operator.
     _link_ok = link_survives()
-    extract_obs = [
-        F.sum(F.when(F.col("link_pos") == -1, 1).otherwise(0))
-        .alias("n_meta"),
-        F.sum(F.when(F.col("link_pos") >= 0, 1).otherwise(0))
-        .alias("n_links")]
-    if prune_reads:
-        extract_obs.append(_key_set(
-            "target_domain",
-            (F.col("link_pos") >= 0) & F.col("_link_ok"), nb)
-            .alias("tgt"))
     extracted = extract_pages(
         fetched.select("url", "domain_name", "html", "robots_ok")
         .repartition(n_part, "url")) \
         .withColumn("_link_ok", _link_ok) \
-        .observe(obs_e, *extract_obs)
+        .observe(obs_e,
+                 F.sum(F.when(F.col("link_pos") == -1, 1).otherwise(0))
+                 .alias("n_meta"),
+                 F.sum(F.when(F.col("link_pos") >= 0, 1).otherwise(0))
+                 .alias("n_links"),
+                 _key_set("target_domain",
+                          (F.col("link_pos") >= 0) & F.col("_link_ok"), nb)
+                 .alias("tgt"))
     tio.write("extract", extracted, iteration)
     tmr.lap("extract_write")
     extracted = tio.read("extract", version=iteration)
@@ -407,16 +396,13 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     tmr.lap("valid_view")
     # history counts for the quota gates on TARGET domains, pruned to
     # this iteration's discovered-target set (bounded by batch × caps —
-    # the discovery/enqueue gates join on exactly these keys).  On the
-    # at-scale read path the seen SCAN side is additionally
-    # bucket-pruned to the targets' own buckets (observed on the extract
-    # write).
-    seen_tgt_view = seen
-    if prune_reads:
-        tgt_kb = {r["k"]: r["b"] for r in em["tgt"]}
-        seen_tgt_view, _tgt_io = tio.read_keyed_state(
-            "seen", base, keys=sorted(tgt_kb), key_buckets=tgt_kb,
-            schema=S.SEEN)
+    # the discovery/enqueue gates join on exactly these keys).  The seen
+    # SCAN side is keyed to the targets' own buckets and files (observed
+    # on the extract write).
+    tgt_kb = {r["k"]: r["b"] for r in em["tgt"]}
+    seen_tgt_view, read_io["seen_targets"] = tio.read_keyed_state(
+        "seen", base, keys=sorted(tgt_kb), key_buckets=tgt_kb,
+        schema=S.SEEN)
     scounts_targets = seen_counts_pruned(
         seen_tgt_view,
         valid.select(F.col("target_domain").alias("domain_name")))
@@ -426,12 +412,11 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # candidate urls' frontier buckets and the touched node keys (link
     # targets and redirect finals; the nodes_batch write adds its own)
     obs_r = Observation()
-    if prune_reads:
-        rels = rels.observe(
-            obs_r,
-            F.collect_set(bucket_of("clean_url", nb)).alias("cand"),
-            _key_set("target_domain", None, nb).alias("tgt"),
-            _key_set("redirect_final_domain", None, nb).alias("redir"))
+    rels = rels.observe(
+        obs_r,
+        F.collect_set(bucket_of("clean_url", nb)).alias("cand"),
+        _key_set("target_domain", None, nb).alias("tgt"),
+        _key_set("redirect_final_domain", None, nb).alias("redir"))
     f_rels = submit(tio.write, "rels", rels, iteration)
 
     # ---- node rows (U1-U4, C6-C8, S9) ----------------------------------
@@ -484,9 +469,8 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
                         F.lit(iteration).alias("updated_iteration")))
 
     obs_nb = Observation()
-    if prune_reads:
-        full_updates = full_updates.observe(
-            obs_nb, _key_set("domain_name", None, nb).alias("keys"))
+    full_updates = full_updates.observe(
+        obs_nb, _key_set("domain_name", None, nb).alias("keys"))
     tio.write("nodes_batch", full_updates, iteration)
     f_rels.result()
     tmr.lap("nodes_batch+rels_write")
@@ -496,26 +480,24 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     edges_batch = edges_from_relationships(rels, iteration)
     discoveries = discoveries_from_relationships(rels)
 
-    # ---- at-scale pruned read views (prune_reads only): the
+    # ---- keyed views for the minimal rows and the anti-join: the
     # touched-domain and candidate-url bucket sets observed on the rels
     # and nodes_batch writes let the minimal-row nodes lookup and the
     # discovery anti-join's frontier key side open only those buckets.
     # (State-table COMMITS need no touched buckets from the plan — each
     # merge_state observes its delta's bucket set on its own write.)
-    nodes_touch_view, frontier_keys_view = nodes, frontier
-    if prune_reads:
-        rm, nbm = obs_r.get, obs_nb.get
-        node_kb = {r["k"]: r["b"]
-                   for r in [*nbm["keys"], *rm["tgt"], *rm["redir"]]}
-        # nodes: bucket prune + file-grain key-range skip; frontier
-        # keys: bucket prune only — frontier files are sorted by claim
-        # stats (status/priority/seq), so url ranges are unselective
-        nodes_touch_view, _touch_io = tio.read_keyed_state(
-            "nodes", base, keys=sorted(node_kb),
-            key_buckets=node_kb, schema=S.NODES)
-        frontier_keys_view = tio.read_state("frontier", version=base,
-                                            schema=S.FRONTIER,
-                                            buckets=sorted(rm["cand"]))
+    rm, nbm = obs_r.get, obs_nb.get
+    node_kb = {r["k"]: r["b"]
+               for r in [*nbm["keys"], *rm["tgt"], *rm["redir"]]}
+    # nodes: bucket prune + file-grain key-range skip; frontier keys:
+    # bucket prune only — frontier files are sorted by claim stats
+    # (status/priority/seq), so url ranges are unselective
+    nodes_touch_view, read_io["nodes_touched"] = tio.read_keyed_state(
+        "nodes", base, keys=sorted(node_kb),
+        key_buckets=node_kb, schema=S.NODES)
+    frontier_keys_view = tio.read_state("frontier", version=base,
+                                        schema=S.FRONTIER,
+                                        buckets=sorted(rm["cand"]))
     tmr.lap("touched_buckets")
 
     # ---- minimal node rows for targets + redirect finals (J2) ----------
@@ -635,7 +617,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # the new-row count rides the new_pending WRITE as an observed
     # metric (was a separate count job over the re-read parquet)
     obs_p = Observation()
-    # frontier_keys_view: at scale the exact anti-join's table side is
+    # frontier_keys_view: the exact anti-join's table side is
     # bucket-pruned to the candidates' own buckets (bit-identical — a
     # candidate can only collide inside its bucket); merge_discoveries
     # uses the frontier ONLY as that url key set
@@ -684,7 +666,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # ---- atomic commit: the frontier MERGE (whose delta needed
     # new_pending) plus the join on the early seen/nodes/edges/metrics
     # commits running since before the discovery merge; the meta write
-    # below is the single commit point.  Bucketed layout: each merge
+    # below is the single commit point.  Each merge
     # appends ONE O(batch) delta partition to the merge-on-read log
     # (folded into touched buckets when the log grows) — per-iteration
     # I/O scales with the batch, not the corpus.  A failure here (the
@@ -699,4 +681,4 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
         tio.prune(cfg.snapshot_retain, iteration)
 
     return IterationResult(iteration, n_claimed, n_proc, n_skip, n_new,
-                           next_seq + n_new, tmr.laps, claim_io)
+                           next_seq + n_new, tmr.laps, claim_io, read_io)

@@ -24,16 +24,13 @@ schema (state tables: ``schemas``; snapshot tables: the ``_schema.json``
 each write records next to its data), and the session keeps Spark's
 file listing on the driver (``session.get_spark``).
 
-Two physical layouts (VERDICT r3 item 1 — the O(corpus) rewrite fix):
+Each table's layout is fixed by its kind; no option selects it:
 
-- **snapshot** (rounds ≤3): each version is a complete rewrite of the
-  table.  O(corpus) read+write per iteration — kept for the
-  layout-identity test and for per-iteration scratch tables (gated /
-  extract / rels / …), which are batch-sized by construction.
-- **bucketed** (default): a state table is hash-partitioned into
-  ``num_buckets`` buckets on its bucket key (``pmod(xxhash64(key), B)``
-  — the stand-in for Iceberg's bucket transform), PLUS a merge-on-read
-  delta log (the Iceberg v2 / Hudi MOR model):
+- **state tables** (``STATE_TABLES``: frontier / seen / nodes / edges)
+  are hash-partitioned into ``num_buckets`` buckets on their bucket key
+  (``pmod(xxhash64(key), B)`` — the stand-in for Iceberg's bucket
+  transform), PLUS a merge-on-read delta log (the Iceberg v2 / Hudi MOR
+  model; VERDICT r3 item 1 — the O(corpus) rewrite fix):
 
   * a per-iteration MERGE writes the delta as ONE small partition
     ``<table>/delta_v<version>/`` — strictly O(batch) bytes, no base
@@ -58,12 +55,17 @@ Two physical layouts (VERDICT r3 item 1 — the O(corpus) rewrite fix):
 
   Reads at any version resolve the greatest manifest ≤ that version;
   bucket-pruned reads (a bounded key set) open only the matching
-  buckets' files and filter the delta overlay to the same buckets.
+  buckets' files and filter the delta overlay to the same buckets, and
+  the per-file footer stats in the manifest let the claim and keyed
+  reads skip files inside a bucket.
 
-``metrics`` (collection_logs, append-only per database.py:570-573) uses
-a third trivial layout: one immutable partition dir per iteration
-(``part_v<version>/``), read as the union of partitions — a pure
-append, never a rewrite.
+- **per-iteration scratch tables** (claimed / gated / extract / rels /
+  …) are batch-sized by construction: each version is a plain snapshot
+  directory (``v<version>/``) plus a pointer file.
+
+- ``metrics`` (collection_logs, append-only per database.py:570-573) is
+  one immutable partition dir per iteration (``part_v<version>/``),
+  read as the union of partitions — a pure append, never a rewrite.
 """
 
 from __future__ import annotations
@@ -79,9 +81,6 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# State-table registry: bucket key (the hash-partition column) and merge
-# key (the upsert identity) per table.  Everything else TableIO touches
-# is per-iteration scratch and stays in the snapshot layout.
 _TRACE_IO = os.environ.get("MTN_TRACE", "") == "1"
 
 
@@ -90,6 +89,9 @@ def _trace(label: str, t0: float) -> None:
         print(f"      [io {label}: {time.time() - t0:.2f}s]", flush=True)
 
 
+# State-table registry: bucket key (the hash-partition column) and merge
+# key (the upsert identity) per table.  Everything else TableIO touches
+# is the metrics append log or per-iteration scratch (snapshot layout).
 STATE_TABLES: dict[str, dict] = {
     # stats_cols: per-FILE footer min/max recorded in the manifest at
     # write time (the Iceberg data-file stats analogue) — they feed the
@@ -212,16 +214,15 @@ def bucket_of(key, num_buckets: int) -> Column:
 class TableIO:
     """Versioned parquet store for one crawl run.
 
-    ``layout`` picks the write layout for STATE_TABLES ('bucketed' |
-    'snapshot'); reads auto-detect the on-disk layout, so any TableIO
-    can read any run directory.  ``retain`` > 0 prunes versions older
-    than the trailing window at each ``prune()`` call (keeping, per
-    table/bucket, the newest version at-or-before the window start so
-    every retained manifest still resolves)."""
+    The table name fixes the layout (module docstring): STATE_TABLES are
+    bucketed merge-on-read, APPEND_TABLES per-iteration partitions, any
+    other name a plain snapshot.  ``prune(retain, upto)`` drops
+    versions older than the trailing window (keeping, per table/bucket,
+    the newest version at-or-before the window start so every retained
+    manifest still resolves)."""
 
     root: str
     spark: SparkSession
-    layout: str = "bucketed"
     num_buckets: int = 32
     # fold the merge-on-read delta log into the buckets after this many
     # pending deltas (Hudi-style compaction cadence): smaller = cheaper
@@ -282,32 +283,19 @@ class TableIO:
     def snapshot_path(self, name: str, version: int) -> str:
         return os.path.join(self._table_dir(name), f"v{version:06d}")
 
-    # ---- layout detection ------------------------------------------------
-
-    def _is_bucketed(self, name: str) -> bool:
-        return os.path.isdir(os.path.join(self._table_dir(name), "_ptr"))
-
-    def _is_append(self, name: str) -> bool:
-        d = self._table_dir(name)
-        try:
-            return any(e.startswith("part_v") for e in os.listdir(d))
-        except OSError:
-            return False
-
-    # ---- snapshot layout (scratch tables + legacy state layout) ----------
+    # ---- snapshot layout (per-iteration scratch tables) -------------------
 
     def write(self, name: str, df: DataFrame, version: int) -> None:
         """Write ``df`` as the table's content at ``version``.
 
-        Dispatch: state tables under the bucketed layout get a FULL
-        bucketed write (used by seed ingestion / maintenance rewrites);
-        append tables get a partition write; everything else a plain
-        snapshot.  Incremental per-iteration state commits go through
-        ``merge_state`` instead."""
+        Dispatch by table kind: state tables get a FULL bucketed write
+        (seed ingestion / whole-table rewrites); append tables get a
+        partition write; everything else a plain snapshot.  Incremental
+        per-iteration state commits go through ``merge_state`` instead."""
         t0 = time.time()
         if name in APPEND_TABLES:
             self.append_partition(name, df, version)
-        elif self.layout == "bucketed" and name in STATE_TABLES:
+        elif name in STATE_TABLES:
             self._write_bucketed(name, df, version, full=True)
         else:
             self._write_snapshot(name, df, version)
@@ -335,12 +323,12 @@ class TableIO:
 
     def read(self, name: str, schema: T.StructType | None = None,
              version: int | None = None) -> DataFrame:
-        """Read the table as of ``version`` (None = latest committed).
-        Auto-detects the on-disk layout.  Without ``schema``, a snapshot
-        is read with the schema its write recorded."""
-        if self._is_bucketed(name):
+        """Read the table as of ``version`` (None = latest committed) in
+        the layout its kind fixes.  Without ``schema``, a snapshot is
+        read with the schema its write recorded."""
+        if name in STATE_TABLES:
             return self._read_bucketed(name, schema, version)
-        if self._is_append(name):
+        if name in APPEND_TABLES:
             return self._read_append(name, schema, version)
         v = None
         if version is None:
@@ -374,7 +362,7 @@ class TableIO:
             except OSError:
                 pass    # written before schemas were recorded: infer
         r = self.spark.read
-        if schema is not None:  # pin column order across layouts
+        if schema is not None:  # pin the recorded column order
             r = r.schema(schema)
         return r.parquet(path)
 
@@ -388,9 +376,6 @@ class TableIO:
             return None
         vs = [v for v in vs if v <= version]
         return max(vs) if vs else None
-
-    def exists(self, name: str) -> bool:
-        return self.current_version(name) is not None
 
     def _pruning_ran(self) -> bool:
         return os.path.exists(os.path.join(self.root, "_pruned"))
@@ -454,6 +439,12 @@ class TableIO:
         the next stub to propagate."""
         v = self._manifest_version_le(name, version)
         if v is None:
+            if os.path.exists(self._pointer_path(name)):
+                # a snapshot pointer where manifests belong: the state
+                # table was written by the retired full-rewrite layout
+                raise ValueError(
+                    f"state table {name} in {self.root} is in the retired "
+                    f"snapshot layout; re-seed the run")
             return {"buckets": {}, "deltas": [], "base_rows": 0,
                     "delta_rows": {}, "delta_buckets": {}, "bucket_files": {},
                     "delta_files": {}, "_files_ref": None}
@@ -478,17 +469,6 @@ class TableIO:
                 "delta_files": {int(k): x for k, x in
                                 m.get("delta_files", {}).items()},
                 "_files_ref": files_ref}
-
-    def state_rows(self, name: str, version: int | None = None) -> int | None:
-        """Approximate row count of a bucketed state table at ``version``
-        from its manifest alone (base + the observed pending delta rows;
-        upper bound — deltas may mask base rows).  No Spark action, no
-        file I/O beyond the manifest JSON.  None for snapshot-layout tables
-        (no cheap count exists there)."""
-        if not self._is_bucketed(name):
-            return None
-        man = self._load_manifest(name, version)
-        return man["base_rows"] + sum(man["delta_rows"].values())
 
     def _write_manifest(self, name: str, version: int,
                         buckets: dict[int, int],
@@ -698,9 +678,7 @@ class TableIO:
                    schema: T.StructType | None = None) -> DataFrame:
         """State-table read; ``buckets`` prunes the scan to a bounded
         bucket set (bucket-pruned reads for batch-bounded key lookups)."""
-        if self._is_bucketed(name):
-            return self._read_bucketed(name, schema, version, buckets)
-        return self.read(name, schema, version)
+        return self._read_bucketed(name, schema, version, buckets)
 
     def read_claim_candidates(self, name: str, version: int | None,
                               k: int,
@@ -735,11 +713,11 @@ class TableIO:
         take a ≤k claim, i.e. claim_batch in plain mode.  Politeness
         mode can claim arbitrarily deep per domain and must read the
         full table.  Falls back to the plain read (info['pruned']=False)
-        when stats are missing or the layout is not bucketed."""
+        when stats are missing."""
         schema = self._state_schema(name, schema)
-        spec = STATE_TABLES.get(name, {})
-        if not (self._is_bucketed(name) and spec.get("stats_cols")):
-            return self.read_state(name, version, schema=schema), \
+        spec = STATE_TABLES[name]
+        if not spec.get("stats_cols"):
+            return self._read_bucketed(name, schema, version), \
                 {"pruned": False}
         man = self._load_manifest(name, version)
         bf = man["bucket_files"]
@@ -827,9 +805,9 @@ class TableIO:
         missing (``info['pruned']=False``)."""
         import bisect
         schema = self._state_schema(name, schema)
-        spec = STATE_TABLES.get(name, {})
+        spec = STATE_TABLES[name]
         stats_cols = spec.get("stats_cols")
-        if not (self._is_bucketed(name) and stats_cols):
+        if not stats_cols:
             return self.read_state(name, version, buckets=buckets,
                                    schema=schema), {"pruned": False}
         man = self._load_manifest(name, version)
@@ -895,103 +873,90 @@ class TableIO:
         upserts).  A duplicate-keyed delta resolves to ONE deterministic
         winner in the delta-log resolution (_resolved_deltas).
 
-        Bucketed layout (merge-on-read): the delta lands as ONE small
-        partition — strictly O(batch) bytes written, no base read — in
-        exactly one Spark job.  That write carries one ``Observation``
-        with the delta's row count and its set of bucket ids; both go
-        into the manifest next to the delta.  An empty delta writes no
-        partition and chains the manifest forward.  The log is folded
-        into the union of its recorded bucket sets when it grows past
-        ``compact_every`` entries or its recorded rows reach a base-row
-        share (``compact_ratio``), so the trigger sees the real size.
-        The fold reads the materialized delta partitions, so the
-        caller's delta LINEAGE executes exactly once regardless of when
-        the fold happens.  Observed values can only over-count (a
-        re-executed task), which costs at most an early or wider fold.
-        Snapshot layout: the legacy full merge+rewrite, same semantics."""
+        Merge-on-read: the delta lands as ONE small partition — strictly
+        O(batch) bytes written, no base read — in exactly one Spark job.
+        That write carries one ``Observation`` with the delta's row count
+        and its set of bucket ids; both go into the manifest next to the
+        delta.  An empty delta writes no partition and chains the manifest
+        forward.  The log is folded into the union of its recorded bucket
+        sets when it grows past ``compact_every`` entries or its recorded
+        rows reach a base-row share (``compact_ratio``), so the trigger
+        sees the real size. The fold reads the materialized delta
+        partitions, so the caller's delta LINEAGE executes exactly once
+        regardless of when the fold happens.  Observed values can only
+        over-count (a re-executed task), which costs at most an early or
+        wider fold."""
         t0 = time.time()
         spec = STATE_TABLES[name]
-        # dispatch on the ON-DISK layout (fixed at init by write()): a
-        # resumed run keeps whatever layout it was seeded with, so a
-        # default-bucketed TableIO can safely resume a snapshot-layout dir
-        if self._is_bucketed(name):
-            man = self._load_manifest(name, base_version)
-            ddir = self._delta_dir(name, version)
-            tmp = ddir + ".tmp"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            obs = Observation()
-            # few files per delta: the content is batch-sized.  coalesce,
-            # not repartition — the delta lineage reads already-
-            # materialized batch parquets, so collapsing its parallelism
-            # is cheaper than a round-robin exchange (F-term, VERDICT r4)
-            (delta.observe(obs, F.count(F.lit(1)).alias("n"),
-                           F.collect_set(bucket_of(spec["bucket_key"],
-                                                   self.num_buckets))
-                           .alias("b"))
-             .coalesce(4).write.mode("overwrite").parquet(tmp))
-            n_delta = int(obs.get["n"] or 0)
-            if n_delta == 0:
-                shutil.rmtree(tmp)
-                # chain the manifest forward so reads at `version` resolve
-                self._write_manifest(name, version, man["buckets"],
-                                     man["deltas"],
-                                     base_rows=man["base_rows"],
-                                     delta_rows=man["delta_rows"],
-                                     delta_buckets=man["delta_buckets"],
-                                     bucket_files=man["bucket_files"]
-                                     if man["_files_ref"] is None else None,
-                                     bucket_files_ref=man["_files_ref"],
-                                     delta_files=man["delta_files"])
-                _trace(f"merge {name} v{version} (empty)", t0)
-                return
-            if os.path.exists(ddir):
-                shutil.rmtree(ddir)
-            os.rename(tmp, ddir)
-            deltas = sorted(set(man["deltas"]) | {version})
-            delta_rows = {v: n for v, n in man["delta_rows"].items()
-                          if v in deltas}
-            delta_rows[version] = n_delta
-            delta_buckets = dict(man["delta_buckets"])
-            delta_buckets[version] = [int(x) for x in obs.get["b"]]
-            delta_files = dict(man["delta_files"])
-            if spec.get("stats_cols"):
-                delta_files[version] = _file_stats(ddir, spec["stats_cols"])
-            # O(1) stub: stats stay by reference in the last full
-            # manifest — per-iteration commit metadata is O(deltas),
-            # not O(total data files)
-            self._write_manifest(name, version, man["buckets"], deltas,
+        man = self._load_manifest(name, base_version)
+        ddir = self._delta_dir(name, version)
+        tmp = ddir + ".tmp"
+        if os.path.exists(tmp):
+            shutil.rmtree(tmp)
+        obs = Observation()
+        # few files per delta: the content is batch-sized.  coalesce,
+        # not repartition — the delta lineage reads already-
+        # materialized batch parquets, so collapsing its parallelism
+        # is cheaper than a round-robin exchange (F-term, VERDICT r4)
+        (delta.observe(obs, F.count(F.lit(1)).alias("n"),
+                       F.collect_set(bucket_of(spec["bucket_key"],
+                                               self.num_buckets))
+                       .alias("b"))
+         .coalesce(4).write.mode("overwrite").parquet(tmp))
+        n_delta = int(obs.get["n"] or 0)
+        if n_delta == 0:
+            shutil.rmtree(tmp)
+            # chain the manifest forward so reads at `version` resolve
+            self._write_manifest(name, version, man["buckets"],
+                                 man["deltas"],
                                  base_rows=man["base_rows"],
-                                 delta_rows=delta_rows,
-                                 delta_buckets=delta_buckets,
+                                 delta_rows=man["delta_rows"],
+                                 delta_buckets=man["delta_buckets"],
                                  bucket_files=man["bucket_files"]
                                  if man["_files_ref"] is None else None,
                                  bucket_files_ref=man["_files_ref"],
-                                 delta_files=delta_files)
-            # fold the log into its touched buckets when it grows LONG
-            # (read overlay lists every pending delta dir) or when the
-            # pending rows are a sizable share of the base (the overlay
-            # would cost more than the rewrite it avoids).  The fold
-            # always runs over the just-materialized delta SCANS — the
-            # round-5 direct copy-on-write branch instead executed the
-            # caller's delta lineage twice (once for its keys broadcast,
-            # once for the merged write); for the edges/seen deltas that
-            # lineage is a corpus-batch window, so the double execution
-            # dominated the commit phase (VERDICT r5 'Next round' #1).
-            threshold = max(self.compact_min_rows,
-                            int(man["base_rows"] * self.compact_ratio))
-            if (len(deltas) >= max(1, self.compact_every)
-                    or sum(delta_rows.values()) >= threshold):
-                self._compact(name, version)
-            _trace(f"merge {name} v{version} (mor)", t0)
-        else:
-            keys = delta.select(*spec["merge_keys"]).distinct()
-            base = self.read(name, version=base_version)
-            merged = (base.join(F.broadcast(keys), spec["merge_keys"],
-                                "left_anti")
-                      .unionByName(delta))
-            self._write_snapshot(name, merged, version)
-            _trace(f"merge {name} v{version} (snap)", t0)
+                                 delta_files=man["delta_files"])
+            _trace(f"merge {name} v{version} (empty)", t0)
+            return
+        if os.path.exists(ddir):
+            shutil.rmtree(ddir)
+        os.rename(tmp, ddir)
+        deltas = sorted(set(man["deltas"]) | {version})
+        delta_rows = {v: n for v, n in man["delta_rows"].items()
+                      if v in deltas}
+        delta_rows[version] = n_delta
+        delta_buckets = dict(man["delta_buckets"])
+        delta_buckets[version] = [int(x) for x in obs.get["b"]]
+        delta_files = dict(man["delta_files"])
+        if spec.get("stats_cols"):
+            delta_files[version] = _file_stats(ddir, spec["stats_cols"])
+        # O(1) stub: stats stay by reference in the last full
+        # manifest — per-iteration commit metadata is O(deltas),
+        # not O(total data files)
+        self._write_manifest(name, version, man["buckets"], deltas,
+                             base_rows=man["base_rows"],
+                             delta_rows=delta_rows,
+                             delta_buckets=delta_buckets,
+                             bucket_files=man["bucket_files"]
+                             if man["_files_ref"] is None else None,
+                             bucket_files_ref=man["_files_ref"],
+                             delta_files=delta_files)
+        # fold the log into its touched buckets when it grows LONG
+        # (read overlay lists every pending delta dir) or when the
+        # pending rows are a sizable share of the base (the overlay
+        # would cost more than the rewrite it avoids).  The fold
+        # always runs over the just-materialized delta SCANS — the
+        # round-5 direct copy-on-write branch instead executed the
+        # caller's delta lineage twice (once for its keys broadcast,
+        # once for the merged write); for the edges/seen deltas that
+        # lineage is a corpus-batch window, so the double execution
+        # dominated the commit phase (VERDICT r5 'Next round' #1).
+        threshold = max(self.compact_min_rows,
+                        int(man["base_rows"] * self.compact_ratio))
+        if (len(deltas) >= max(1, self.compact_every)
+                or sum(delta_rows.values()) >= threshold):
+            self._compact(name, version)
+        _trace(f"merge {name} v{version} (mor)", t0)
 
     def _compact(self, name: str, version: int) -> None:
         """Fold the pending delta log into its touched buckets
@@ -1101,7 +1066,7 @@ class TableIO:
             d = self._table_dir(name)
             if not os.path.isdir(d):
                 continue
-            if self._is_bucketed(name):
+            if name in STATE_TABLES:
                 pd_ = self._ptr_dir(name)
                 manifests = [(int(m.group(1)), e) for e in os.listdir(pd_)
                              if (m := re.fullmatch(r"v(\d+)\.json", e))]
@@ -1136,7 +1101,7 @@ class TableIO:
                     for v, e in vs:
                         if v not in kept:
                             shutil.rmtree(os.path.join(bd, e))
-            elif self._is_append(name):
+            elif name in APPEND_TABLES:
                 continue
             else:
                 vs = [(int(m.group(1)), e) for e in os.listdir(d)

@@ -7,9 +7,9 @@ spark-submit --py-files on a multi-executor cluster").
 
 In the sandbox the same script runs on local[N] against fixture
 parquet.  Pass --resume to continue a checkpointed run (no seeds read).
-All cluster-mode knobs (AQE, shuffle partitions) are plain Spark
-confs / CrawlConfig fields — no code change between
-local[32] and a 1000-executor cluster.
+Cluster-mode knobs (AQE, shuffle partitions) are plain Spark confs set
+with spark-submit --conf; the crawl knobs are this script's flags — no
+code change between local[32] and a 1000-executor cluster.
 """
 
 from __future__ import annotations

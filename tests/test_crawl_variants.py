@@ -80,6 +80,30 @@ def test_politeness_budget_deterministic(spark, fixture_paths):
     assert all(r["count"] <= 1 for r in per_dom)
 
 
+def test_keyed_read_io_reported(spark, fixture_paths):
+    """Every iteration reports the file-skipping telemetry of its four
+    keyed state reads, also on a small table at a small bucket count."""
+    # compact_every=2 folds the seen/nodes deltas into bucket files at
+    # iteration 2, so iteration 3's keyed reads have files to skip
+    tio = TableIO(tempfile.mkdtemp(prefix="mtn_rio_"), spark,
+                  num_buckets=8, compact_every=2)
+    summary = run_crawl(spark, tio, _inputs(spark, fixture_paths),
+                        CrawlConfig(),
+                        seeds=spark.read.parquet(
+                            fixture_paths["frontier_seed"]),
+                        max_iterations=3)
+    assert len(summary.iterations) == 3
+    for r in summary.iterations:
+        assert r.read_io is not None, r
+        assert set(r.read_io) == {"seen_gate", "nodes_batch",
+                                  "seen_targets", "nodes_touched"}, r
+        for info in r.read_io.values():
+            assert info["pruned"] is True, r.read_io
+            assert info["files_opened"] <= info["files_total"], r.read_io
+    last = summary.iterations[-1].read_io
+    assert all(info["files_total"] > 0 for info in last.values()), last
+
+
 def test_claim_io_pruned_in_crawl_loop(spark, fixture_paths):
     """End-to-end guard for the stats-pruned claim read (VERDICT r5 item
     5): a bucketed crawl at a scale-sized bucket count must report

@@ -280,6 +280,53 @@ def test_package_builds_no_python_local_tables():
     assert offenders == [], offenders
 
 
+def test_every_crawl_config_field_is_read():
+    """A ``CrawlConfig`` field the package never reads is a knob that
+    does nothing.  A field counts as read when some module other than
+    ``config.py`` loads it as an attribute, or loads a ``CrawlConfig``
+    property whose body reads it."""
+    import ast
+
+    import map_the_net_crawler_spark as pkg
+    root = os.path.dirname(pkg.__file__)
+    fields, prop_reads = [], {}
+    with open(os.path.join(root, "config.py")) as f:
+        cfg_tree = ast.parse(f.read())
+    cls = next(n for n in cfg_tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "CrawlConfig")
+    for node in cls.body:
+        if isinstance(node, ast.AnnAssign):
+            fields.append(node.target.id)
+        elif isinstance(node, ast.FunctionDef):
+            prop_reads[node.name] = {
+                n.attr for n in ast.walk(node)
+                if isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name) and n.value.id == "self"}
+    loaded = set()
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            path = os.path.join(dirpath, fname)
+            if not fname.endswith(".py") or path == os.path.join(
+                    root, "config.py"):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            loaded |= {n.attr for n in ast.walk(tree)
+                       if isinstance(n, ast.Attribute)
+                       and isinstance(n.ctx, ast.Load)}
+    # a loaded property reads its fields, and may read another property
+    # (max_external_links reads max_internal_links): follow to a fixpoint
+    live = set(loaded)
+    while True:
+        more = set().union(*(prop_reads[p] for p in prop_reads
+                             if p in live)) - live
+        if not more:
+            break
+        live |= more
+    dead = [f for f in fields if f not in live]
+    assert dead == [], f"CrawlConfig fields never read: {dead}"
+
+
 class TestDedupJobs:
     """``spread_small`` probes only scan-rooted inputs, and
     ``minhash_lsh_pairs`` runs its Python kernel once per document."""

@@ -232,6 +232,61 @@ class TestWinnowing:
         assert out[6] == set()              # 5-char doc: no full window
 
 
+class TestOracleWhitespace:
+    """Java's ``\\s`` matches ``\\x0b`` (vertical tab), RE2's does not:
+    each DuckDB restatement of a ``\\s``-splitting operator must give the
+    operator's rows on text holding one."""
+
+    TEXTS = [
+        "alpha\x0bbeta gamma",
+        "alpha beta gamma",
+        "\x0bthe\x0bcat and\x0b\x0bthe dog is in the house\x0b",
+        "the cat and the dog is in the house",
+        "el perro\x0by la casa con una puerta para los gatos",
+        None,
+    ]
+
+    def test_vertical_tab_oracles_match_operators(self, spark, tmp_path):
+        import duckdb
+
+        import __spark_entry__ as E
+        from map_the_net_crawler_spark.functions.classify import (
+            asn_description_from_org, asn_from_org)
+        pdf = pd.DataFrame({"doc_id": np.arange(len(self.TEXTS),
+                                                dtype=np.int64),
+                            "text": self.TEXTS})
+        spark.createDataFrame(pdf, "doc_id long, text string") \
+            .write.parquet(str(tmp_path / "documents.parquet"))
+        con = duckdb.connect()
+        con.register("documents", pdf)
+        sql, ops = E.oracle_sql(), E.queries()
+        for name in ("q_dedup_exact", "q_text_metrics", "q_lang_quality",
+                     "q_winnow_fingerprints", "q_word_jaccard"):
+            got = sorted(map(tuple, ops[name](spark, str(tmp_path))
+                             .collect()))
+            want = sorted(con.sql(sql[name]).fetchall())
+            assert got == want and got, name
+        # the tab-joined text hashes like its space-joined twin
+        dedup = {r.doc_id: r.group_size
+                 for r in ops["q_dedup_exact"](spark, str(tmp_path))
+                 .collect()}
+        assert dedup[0] == dedup[1] == 2
+
+        orgs = pd.DataFrame({"org": ["AS1\x0bExample Net",
+                                     "  AS2\x0b\x0b Example", "AS3", ""]})
+        con.register("orgs", orgs)
+        o = F.col("org")
+        got = sorted(map(tuple, spark.createDataFrame(orgs, "org string")
+                         .select("org", asn_from_org(o).alias("asn"),
+                                 asn_description_from_org(o)
+                                 .alias("asn_description")).collect()),
+                     key=repr)
+        want = sorted(con.sql(f"SELECT org, {E._sql_asn_fields('org')} "
+                              f"FROM orgs").fetchall(), key=repr)
+        assert got == want
+        assert ("AS1\x0bExample Net", "AS1", "AS1\x0bExample Net") in got
+
+
 def make_png(width: int, height: int) -> bytes:
     """Minimal valid grayscale PNG, pure stdlib (zlib CRCs + IDAT)."""
     import struct

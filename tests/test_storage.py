@@ -1,12 +1,14 @@
-"""Bucketed incremental state commits (VERDICT r3 item 1) + retention.
+"""Bucketed merge-on-read state commits (VERDICT r3 item 1) + retention.
 
-The bucketed TableIO layout must be (a) bit-identical to the legacy
-full-rewrite snapshot layout on the same crawl, (b) incremental — bytes
-written per iteration scale with the BATCH, not the corpus, when the
-bucket count is sized to the corpus (Iceberg-style: bucket files of
-roughly constant size, bucket COUNT grows with the data), and
-(c) prunable — a retention window bounds disk while keeping resume and
-reads at retained versions working.
+The state-table layout must be (a) invariant under its storage knobs —
+the same crawl gives bit-identical frontier/seen/nodes/edges/metrics
+whether or not the delta log is folded mid-run, and at any bucket
+count, (b) incremental — bytes written per iteration scale with the
+BATCH, not the corpus, when the bucket count is sized to the corpus
+(Iceberg-style: bucket files of roughly constant size, bucket COUNT
+grows with the data), and (c) prunable — a retention window bounds disk
+while keeping resume and reads at retained versions working.  Reads
+open only the buckets and files their keys can live in.
 """
 
 from __future__ import annotations
@@ -56,31 +58,47 @@ def _dir_bytes(path: str) -> int:
 
 
 class TestBucketedLayout:
-    def test_layout_identity(self, spark, fixture_paths):
-        """bucketed vs snapshot layout: same crawl, bit-identical
-        frontier/seen/nodes/edges/metrics."""
-        results = {}
-        for layout in ("snapshot", "bucketed"):
-            # compact_every=2: the 3-iteration crawl crosses a
-            # merge-on-read compaction boundary mid-run
-            tio = TableIO(tempfile.mkdtemp(prefix=f"mtn_lay_{layout}_"),
-                          spark, layout=layout, num_buckets=8,
-                          compact_every=2)
+    def test_compaction_identity(self, spark, fixture_paths):
+        """Folding the delta log mid-run changes no table: a 3-iteration
+        crawl with compact_every=2 (crosses a merge-on-read compaction
+        boundary) equals one with compact_every=100 bit for bit."""
+        results, folded = {}, {}
+        for every in (2, 100):
+            tio = TableIO(tempfile.mkdtemp(prefix=f"mtn_fold_{every}_"),
+                          spark, num_buckets=8, compact_every=every)
             run_crawl(spark, tio, _inputs(spark, fixture_paths),
                       CrawlConfig(),
                       seeds=spark.read.parquet(fixture_paths["frontier_seed"]),
                       max_iterations=3)
-            results[layout] = _tables(tio)
-            if layout == "bucketed":
-                # layout actually engaged: manifests + bucket dirs exist
-                assert os.path.isdir(os.path.join(tio.root, "frontier",
-                                                  "_ptr"))
-                assert any(e.startswith("b") for e in
-                           os.listdir(os.path.join(tio.root, "frontier")))
-                # metrics is a pure per-iteration partition append
-                mdir = os.path.join(tio.root, "metrics")
-                assert all(e.startswith("part_v") for e in os.listdir(mdir))
-        assert results["snapshot"] == results["bucketed"]
+            results[every] = _tables(tio)
+            # a fold: a manifest whose delta list is empty right after
+            # one that held deltas
+            folded[every] = {
+                t for t in STATE_TABLES for v in range(1, 4)
+                if tio._manifest_json(t, v - 1).get("deltas")
+                and tio._manifest_json(t, v).get("deltas") == []}
+            # bucketed state: manifests + bucket dirs exist
+            assert os.path.isdir(os.path.join(tio.root, "frontier",
+                                              "_ptr"))
+            assert any(e.startswith("b") for e in
+                       os.listdir(os.path.join(tio.root, "frontier")))
+            # metrics is a pure per-iteration partition append
+            mdir = os.path.join(tio.root, "metrics")
+            assert all(e.startswith("part_v") for e in os.listdir(mdir))
+        # only the compact_every=2 run folds (the size trigger's
+        # 4096-row floor is far above this fixture's deltas)
+        assert folded[2] and not folded[100], folded
+        assert results[2] == results[100]
+
+    def test_snapshot_layout_state_dir_refused(self, spark):
+        """A state table written by the retired full-rewrite layout (a
+        snapshot pointer, no manifests) is refused, not read as empty."""
+        tio = TableIO(tempfile.mkdtemp(prefix="mtn_oldlay_"), spark)
+        os.makedirs(os.path.join(tio.root, "frontier"))
+        with open(os.path.join(tio.root, "frontier", "_current"), "w") as f:
+            f.write('{"version": 3}')
+        with pytest.raises(ValueError, match="snapshot layout"):
+            tio.read("frontier", S.FRONTIER)
 
     def test_merge_state_unit(self, spark):
         """merge_state upsert semantics under merge-on-read: O(batch)
@@ -152,10 +170,9 @@ class TestBucketedLayout:
         assert gotv2 == got2
 
     def test_pruned_read_path_identity(self, spark, fixture_paths):
-        """num_buckets >= 64 flips on the at-scale bucket-pruned state
-        READS (seen gates / nodes enrich+complete+minimal / frontier
-        anti-join keys) — the crawl must stay bit-identical to the
-        default full-read path."""
+        """The keyed state reads (seen gates / nodes enrich+complete+
+        minimal / frontier anti-join keys) open only the keys' buckets:
+        the crawl is bit-identical at 8 and at 128 buckets."""
         results = {}
         for nb in (8, 128):
             tio = TableIO(tempfile.mkdtemp(prefix=f"mtn_pr_{nb}_"),
@@ -166,26 +183,6 @@ class TestBucketedLayout:
                       max_iterations=3)
             results[nb] = _tables(tio)
         assert results[8] == results[128]
-
-    def test_prune_gate_by_table_size(self, spark, fixture_paths):
-        """The pruned-read path also activates at the SANDBOX bucket
-        count once the seen/nodes manifests cross
-        cfg.prune_reads_min_rows — results stay bit-identical to the
-        full-read run (a long sandbox-bucketed crawl must stop scanning
-        its whole history without re-bucketing)."""
-        results = {}
-        for label, cfg in (("off", CrawlConfig()),
-                           ("size_gated", CrawlConfig(
-                               prune_reads_min_rows=1))):
-            tio = TableIO(tempfile.mkdtemp(prefix=f"mtn_pg_{label}_"),
-                          spark, num_buckets=8)
-            run_crawl(spark, tio, _inputs(spark, fixture_paths),
-                      cfg,
-                      seeds=spark.read.parquet(
-                          fixture_paths["frontier_seed"]),
-                      max_iterations=3)
-            results[label] = _tables(tio)
-        assert results["off"] == results["size_gated"]
 
     def test_commit_io_scales_with_batch(self, spark, fixture_paths):
         """VERDICT r3 item 1 'done' criterion: with buckets sized to the
@@ -547,7 +544,8 @@ class TestManifestStubs:
         got = tio.read_state("frontier", schema=S.FRONTIER)
         assert got.filter(F.col("url").startswith("http://nv")).count() \
             == 150
-        assert tio.state_rows("frontier") == 12_000 + 150
+        assert man["base_rows"] + sum(man["delta_rows"].values()) \
+            == 12_000 + 150
         # a compaction (full bucket write) re-anchors the ref
         tio._compact("frontier", 4)
         man4 = tio._load_manifest("frontier", 4)
