@@ -1163,7 +1163,7 @@ def _sql_whois_text() -> str:
             f"nullif(regexp_extract(whois_text, '(?i){p}', 1), '')"
             for p in patterns)
         return (f"regexp_replace(coalesce({vals}), "
-                "'^\\s+|\\s+$', '', 'g')")
+                "'^[\\s\\v]+|[\\s\\v]+$', '', 'g')")
 
     def dates(raw):
         return (f"coalesce(try_strptime({raw}, '%Y-%m-%d'), "
@@ -1255,7 +1255,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT *,
                 list_filter(string_split(query, '&'), x -> x <> '') AS params,
                 list_filter(string_split(path, '/'), x -> x <> '') AS segs,
-                regexp_replace(coalesce(link_text, ''), '^\\s+|\\s+$', '', 'g') AS txt
+                regexp_replace(coalesce(link_text, ''), '^[\\s\\v]+|[\\s\\v]+$', '', 'g') AS txt
               FROM l)
             SELECT pos, href, link_text, src_domain,
               regexp_replace(lower(netloc), '^www\\.', '') AS target_domain
@@ -1316,7 +1316,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT *,
                 list_filter(string_split(query, '&'), x -> x <> '') AS params,
                 list_filter(string_split(path, '/'), x -> x <> '') AS segs,
-                regexp_replace(coalesce(link_text, ''), '^\\s+|\\s+$', '', 'g') AS txt
+                regexp_replace(coalesce(link_text, ''), '^[\\s\\v]+|[\\s\\v]+$', '', 'g') AS txt
               FROM l),
             r AS (
               SELECT src_domain AS domain_name,

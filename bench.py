@@ -419,7 +419,8 @@ def main():
     spark = make_spark(CPUS)
     t0 = time.time()
     # throwaway canary first: the very first job of a session measures
-    # JVM JIT warmup (~60-90 s cold), not host noise — the recorded
+    # JVM and Python-worker warm-up (~8 s cold against ~1.4 s warm at
+    # local[4] on a 4-core VM), not host noise — the recorded
     # pre-reading must isolate the latter
     bench_canary(spark, SF_DIR)
     canary_pre = bench_canary(spark, SF_DIR)

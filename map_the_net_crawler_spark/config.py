@@ -60,5 +60,3 @@ class CrawlConfig:
         """Remaining slots for external (domain_collector.py:1027)."""
         return self.max_links_per_page - self.max_internal_links
 
-
-DEFAULT_CONFIG = CrawlConfig()

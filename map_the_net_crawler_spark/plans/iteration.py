@@ -84,6 +84,25 @@ class IterationResult:
     # complete set), 'seen_targets' (link-target quota gates) and
     # 'nodes_touched' (minimal node rows)
     read_io: dict | None = None
+    # JVM-wide compile work during the iteration: 'jit_compile_ms'
+    # (HotSpot JIT compile time) and 'codegen_classes' (classes Spark
+    # compiled with Janino)
+    jvm: dict | None = None
+
+
+def _jvm_counters(spark: SparkSession) -> dict[str, int]:
+    """The driver JVM's cumulative JIT compile ms and Janino class
+    count; both only grow, so a difference of two readings is the work
+    done between them."""
+    jvm = spark.sparkContext._jvm
+    return {
+        "jit_compile_ms": int(jvm.java.lang.management.ManagementFactory
+                              .getCompilationMXBean()
+                              .getTotalCompilationTime()),
+        "codegen_classes": int(jvm.org.apache.spark.metrics.source
+                               .CodegenMetrics.METRIC_COMPILATION_TIME()
+                               .getCount()),
+    }
 
 
 def _key_set(key: str, cond: Column | None, nb: int) -> Column:
@@ -170,14 +189,17 @@ def run_iteration(spark: SparkSession, tio: TableIO, inputs: CrawlInputs,
         futs.append(f)
         return f
 
+    jvm0 = _jvm_counters(spark)
     try:
-        return _run_iteration_impl(spark, tio, inputs, cfg, iteration,
-                                   next_seq, politeness_budget,
-                                   salt_buckets, submit)
+        res = _run_iteration_impl(spark, tio, inputs, cfg, iteration,
+                                  next_seq, politeness_budget,
+                                  salt_buckets, submit)
     except BaseException as e:
         _join_all(futs, e)
     finally:
         pool.shutdown(wait=True)
+    res.jvm = {k: v - jvm0[k] for k, v in _jvm_counters(spark).items()}
+    return res
 
 
 def _run_iteration_impl(spark: SparkSession, tio: TableIO,

@@ -82,7 +82,9 @@ def test_politeness_budget_deterministic(spark, fixture_paths):
 
 def test_keyed_read_io_reported(spark, fixture_paths):
     """Every iteration reports the file-skipping telemetry of its four
-    keyed state reads, also on a small table at a small bucket count."""
+    keyed state reads, also on a small table at a small bucket count,
+    and the JIT compile ms and Janino class count the JVM spent during
+    it, as non-negative deltas."""
     # compact_every=2 folds the seen/nodes deltas into bucket files at
     # iteration 2, so iteration 3's keyed reads have files to skip
     tio = TableIO(tempfile.mkdtemp(prefix="mtn_rio_"), spark,
@@ -100,6 +102,9 @@ def test_keyed_read_io_reported(spark, fixture_paths):
         for info in r.read_io.values():
             assert info["pruned"] is True, r.read_io
             assert info["files_opened"] <= info["files_total"], r.read_io
+        assert set(r.jvm) == {"jit_compile_ms", "codegen_classes"}, r.jvm
+        assert all(isinstance(v, int) and v >= 0
+                   for v in r.jvm.values()), r.jvm
     last = summary.iterations[-1].read_io
     assert all(info["files_total"] > 0 for info in last.values()), last
 

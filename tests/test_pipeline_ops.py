@@ -3,6 +3,7 @@ text analysis, multimodal plumbing, streaming equivalence."""
 
 from __future__ import annotations
 
+import datetime
 import math
 
 import numpy as np
@@ -285,6 +286,51 @@ class TestOracleWhitespace:
                               f"FROM orgs").fetchall(), key=repr)
         assert got == want
         assert ("AS1\x0bExample Net", "AS1", "AS1\x0bExample Net") in got
+
+    def test_vertical_tab_trim_oracles_match_operators(self, spark, tmp_path,
+                                                       monkeypatch):
+        """The whois-text and link-text trims strip ``\\x0b`` as Java's
+        ``\\s`` does: a registrar, date or link text padded with one
+        reads as its unpadded twin."""
+        import duckdb
+
+        import __spark_entry__ as E
+        pd.DataFrame({
+            "domain": ["vt-0.example", "vt-1.example", "plain.example",
+                       "none.example"],
+            "whois_text": [
+                "Registrar: Alpha Names\x0b\nCreation Date: 2019-03-01"
+                "\x0b\nRegistry Expiry Date: 2026-03-01\n",
+                "Registrar Name:\x0b Beta\x0b\x0b\nCreated: 2020-05-02 "
+                "10:11:12\x0b\nExpires: 03-Jan-2030\x0b",
+                "Registrar: Plain\nCreated Date: 03-Mar-2018\n",
+                None],
+        }).to_parquet(tmp_path / "whois_raw.parquet")
+        pd.DataFrame({
+            "href": [f"http://site{i:05d}.org/" for i in range(5)],
+            "link_text": ["a\x0b", "read more\x0b", "\x0bGood link\x0b",
+                          "Fine text", None],
+            "src_domain": "src.example",
+            "pos": np.arange(5, dtype=np.int64),
+        }).to_parquet(tmp_path / "link_candidates.parquet")
+        monkeypatch.setattr(E, "FIXDIR", str(tmp_path))
+        monkeypatch.setattr(E, "_FIX", str(tmp_path))
+        con = duckdb.connect()
+        sql, ops = E.oracle_sql(), E.queries()
+        got = {}
+        for name in ("q_whois_text_extract", "q_link_filter",
+                     "q_link_exclusion_stats"):
+            got[name] = sorted(map(tuple, ops[name](spark, str(tmp_path))
+                                   .collect()), key=repr)
+            want = sorted(con.sql(sql[name]).fetchall(), key=repr)
+            assert got[name] == want and got[name], name
+        whois = {r[0]: r[1:] for r in got["q_whois_text_extract"]}
+        assert whois["vt-0.example"] == (
+            "Alpha Names", datetime.date(2019, 3, 1),
+            datetime.date(2026, 3, 1))
+        assert whois["vt-1.example"][0] == "Beta"
+        assert whois["vt-1.example"][1] == datetime.date(2020, 5, 2)
+        assert [r[0] for r in got["q_link_filter"]] == [2, 3]
 
 
 def make_png(width: int, height: int) -> bytes:
