@@ -5,8 +5,9 @@ committed deterministic fixtures and returns the edge table.
 ``queries()`` exposes one callable per implemented operator from
 SURVEY.md §2 (+ the training-data pipeline ops); ``oracle_sql()`` gives
 the DuckDB-equivalent ANSI SQL for every SQL-expressible one.  Crawl
-operators run over the committed fixtures in /root/repo/fixtures
-(referenced from SQL via read_parquet); document/embedding/TPC-H
+operators run over the committed fixtures in ``fixtures/`` next to this
+file (``FIXDIR``, which the SQL oracles read with read_parquet when
+``oracle_sql()`` is called); document/embedding/TPC-H
 operators run over the driver's pre-registered sf views.
 """
 
@@ -894,9 +895,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-_FIX = "/root/repo/fixtures"
-
-
 def _sql_category_case(lowered_expr: str) -> str:
     """DuckDB CASE chain generated from the same rules.CATEGORY_RULES the
     Spark Column/UDF variants use — cannot drift."""
@@ -1109,7 +1107,7 @@ def _sql_psl(netloc_x: str) -> str:
         d AS (
           SELECT DISTINCT regexp_replace(lower({netloc_x}), '^www\\.', '')
             AS domain
-          FROM read_parquet('{_FIX}/link_candidates.parquet')),
+          FROM read_parquet('{FIXDIR}/link_candidates.parquet')),
         l AS (SELECT domain, trim(lower(domain), '.') AS host,
                      string_split(trim(lower(domain), '.'), '.') AS labels,
                      len(string_split(trim(lower(domain), '.'), '.')) AS n
@@ -1176,7 +1174,7 @@ def _sql_whois_text() -> str:
             {first(WHOIS_REGISTRAR_PATTERNS)} AS registrar,
             {first(WHOIS_CREATED_PATTERNS)} AS craw,
             {first(WHOIS_EXPIRY_PATTERNS)} AS eraw
-          FROM read_parquet('{_FIX}/whois_raw.parquet'))
+          FROM read_parquet('{FIXDIR}/whois_raw.parquet'))
         SELECT domain, registrar,
           {dates('craw')} AS created_date,
           {dates('eraw')} AS expiry_date
@@ -1250,7 +1248,7 @@ def oracle_sql() -> dict[str, str]:
             WITH l AS (
               SELECT pos, href, link_text, src_domain,
                 {netloc_x} AS netloc, {path_x} AS path, {query_x} AS query
-              FROM read_parquet('{_FIX}/link_candidates.parquet')),
+              FROM read_parquet('{FIXDIR}/link_candidates.parquet')),
             p AS (
               SELECT *,
                 list_filter(string_split(query, '&'), x -> x <> '') AS params,
@@ -1297,7 +1295,7 @@ def oracle_sql() -> dict[str, str]:
             WITH d AS (
               SELECT DISTINCT regexp_replace(lower({netloc_x}), '^www\\.', '')
                 AS domain_name
-              FROM read_parquet('{_FIX}/link_candidates.parquet'))
+              FROM read_parquet('{FIXDIR}/link_candidates.parquet'))
             SELECT domain_name FROM d
             WHERE domain_name <> ''
               AND regexp_matches(lower(domain_name), '{pattern_re}')
@@ -1311,7 +1309,7 @@ def oracle_sql() -> dict[str, str]:
             WITH l AS (
               SELECT pos, href, link_text, src_domain,
                 {netloc_x} AS netloc, {path_x} AS path, {query_x} AS query
-              FROM read_parquet('{_FIX}/link_candidates.parquet')),
+              FROM read_parquet('{FIXDIR}/link_candidates.parquet')),
             p AS (
               SELECT *,
                 list_filter(string_split(query, '&'), x -> x <> '') AS params,
@@ -1349,7 +1347,7 @@ def oracle_sql() -> dict[str, str]:
         "q_domain_exclusion": f"""
             WITH d AS (
               SELECT DISTINCT regexp_replace(lower({netloc_x}), '^www\\.', '') AS domain
-              FROM read_parquet('{_FIX}/link_candidates.parquet'))
+              FROM read_parquet('{FIXDIR}/link_candidates.parquet'))
             SELECT domain,
               regexp_matches(lower(domain), '{pattern_re}') AS is_excluded,
               regexp_matches(domain,
@@ -1365,7 +1363,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q_tags_derive": f"""
             WITH d AS (SELECT domain, string_split(domain, '.') AS parts
-                       FROM read_parquet('{_FIX}/dns.parquet'))
+                       FROM read_parquet('{FIXDIR}/dns.parquet'))
             SELECT domain,
               array_to_string(list_sort(list_distinct(
                 ['kw1', 'kw2']
@@ -1378,7 +1376,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT claim_rank, url, domain_name, priority, depth FROM (
               SELECT *, row_number() OVER (
                 ORDER BY priority DESC, discovery_seq ASC, url ASC) AS claim_rank
-              FROM read_parquet('{_FIX}/frontier_seed.parquet')
+              FROM read_parquet('{FIXDIR}/frontier_seed.parquet')
               WHERE status = 'pending') t
             WHERE claim_rank <= 10
         """,
@@ -1386,7 +1384,7 @@ def oracle_sql() -> dict[str, str]:
             -- incumbent keeps status/error; priority=GREATEST, depth=LEAST,
             -- seq=LEAST; urls only in the new batch insert whole
             WITH base AS (
-              SELECT * FROM read_parquet('{_FIX}/frontier_seed.parquet'))
+              SELECT * FROM read_parquet('{FIXDIR}/frontier_seed.parquet'))
             SELECT url, priority + 2 AS priority, depth,
                    status, error_message, discovery_seq
             FROM base
@@ -1405,7 +1403,7 @@ def oracle_sql() -> dict[str, str]:
             FROM m GROUP BY 1, 2
         """,
         "q_backfill_merge": f"""
-            WITH d AS (SELECT domain FROM read_parquet('{_FIX}/dns.parquet')),
+            WITH d AS (SELECT domain FROM read_parquet('{FIXDIR}/dns.parquet')),
             n AS (SELECT domain AS domain_name,
                     CASE WHEN substring(md5(domain), 1, 1) < '8'
                          THEN 'KeepMe' END AS reg0,
@@ -1421,13 +1419,13 @@ def oracle_sql() -> dict[str, str]:
                              try_strptime(expiry_date_raw, '%Y-%m-%d %H:%M:%S'),
                              try_strptime(expiry_date_raw, '%d-%b-%Y'))::date AS we,
                     registrar AS wr
-                  FROM read_parquet('{_FIX}/whois.parquet')),
+                  FROM read_parquet('{FIXDIR}/whois.parquet')),
             preg AS (SELECT domain AS main_domain,
                        CASE WHEN substring(md5(domain), 1, 1) < '8'
                             THEN 'KeepMe' END AS parent_reg
                      FROM d),
             dn AS (SELECT domain, nameservers, ip_address, asn
-                   FROM read_parquet('{_FIX}/dns.parquet'))
+                   FROM read_parquet('{FIXDIR}/dns.parquet'))
             SELECT n.domain_name,
               CASE WHEN n.domain_name = n.main_domain THEN w.wc END
                 AS created_date,
@@ -1447,9 +1445,9 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN preg p ON p.main_domain = n.main_domain
             LEFT JOIN dn own ON own.domain = n.domain_name
             LEFT JOIN dn par ON par.domain = n.main_domain
-            LEFT JOIN read_parquet('{_FIX}/ssl.parquet') s
+            LEFT JOIN read_parquet('{FIXDIR}/ssl.parquet') s
               ON s.domain = n.domain_name
-            LEFT JOIN read_parquet('{_FIX}/geo.parquet') g
+            LEFT JOIN read_parquet('{FIXDIR}/geo.parquet') g
               ON g.ip_address = own.ip_address
         """,
         # goldens: produced by the SEQUENTIAL implementations (htmlx
@@ -1459,13 +1457,13 @@ def oracle_sql() -> dict[str, str]:
         # the sequential semantics (same strategy as the hand-computed
         # goldens in tests/test_semantics_core.py).
         "q_backfill_web": f"""
-            WITH d AS (SELECT domain FROM read_parquet('{_FIX}/dns.parquet')),
+            WITH d AS (SELECT domain FROM read_parquet('{FIXDIR}/dns.parquet')),
             n AS (SELECT domain AS domain_name,
                     CASE WHEN substring(md5(domain), 1, 1) < '8'
                          THEN 'KeepTitle' END AS t0
                   FROM d),
             g AS (SELECT url, title, description, favicon_url
-                  FROM read_parquet('{_FIX}/golden_extract_meta.parquet'))
+                  FROM read_parquet('{FIXDIR}/golden_extract_meta.parquet'))
             SELECT n.domain_name,
               coalesce(n.t0, g.title) AS title,
               g.description AS description,
@@ -1475,7 +1473,7 @@ def oracle_sql() -> dict[str, str]:
         "q_crawl_edges": f"""
             SELECT src_domain, dst_domain, relationship_type,
                    link_text, link_url
-            FROM read_parquet('{_FIX}/golden_crawl_edges.parquet')
+            FROM read_parquet('{FIXDIR}/golden_crawl_edges.parquet')
         """,
         "q_screenshot_manifest": f"""
             SELECT domain AS domain_name,
@@ -1483,20 +1481,20 @@ def oracle_sql() -> dict[str, str]:
               (length(domain) % 8 + 4)::INT AS width,
               (ascii(substring(domain, 1, 1)) % 8 + 4)::INT AS height,
               true AS ok
-            FROM read_parquet('{_FIX}/dns.parquet')
+            FROM read_parquet('{FIXDIR}/dns.parquet')
         """,
         "q_extract_text": f"""
             SELECT url, title, description, favicon_url, meta_keywords, text
-            FROM read_parquet('{_FIX}/golden_extract_meta.parquet')
+            FROM read_parquet('{FIXDIR}/golden_extract_meta.parquet')
         """,
         "q_robots_decisions": f"""
             SELECT domain, allowed
-            FROM read_parquet('{_FIX}/golden_robots_decisions.parquet')
+            FROM read_parquet('{FIXDIR}/golden_robots_decisions.parquet')
         """,
         "q_queue_stats": f"""
             SELECT status, priority, count(*) AS cnt,
                    min(discovery_seq) AS min_seq, max(discovery_seq) AS max_seq
-            FROM read_parquet('{_FIX}/frontier_seed.parquet')
+            FROM read_parquet('{FIXDIR}/frontier_seed.parquet')
             GROUP BY status, priority
         """,
         "q_url_canonicalize": f"""
@@ -1507,7 +1505,7 @@ def oracle_sql() -> dict[str, str]:
                 regexp_replace(regexp_extract(url,
                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1),
                   ';[^/]*$', '') AS path
-              FROM read_parquet('{_FIX}/raw_urls.parquet'))
+              FROM read_parquet('{FIXDIR}/raw_urls.parquet'))
             SELECT url,
               CASE WHEN length(scheme || '://' || netloc || path) > 1
                         AND (scheme || '://' || netloc || path) LIKE '%/'
@@ -1522,7 +1520,7 @@ def oracle_sql() -> dict[str, str]:
                    THEN array_to_string(string_split(domain, '.')[-2:], '.')
                    ELSE domain END AS main_domain,
               len(string_split(domain, '.')) > 2 AS is_subdomain
-            FROM read_parquet('{_FIX}/dns.parquet')
+            FROM read_parquet('{FIXDIR}/dns.parquet')
         """,
         "q_whois_dates": f"""
             SELECT domain,
@@ -1533,23 +1531,23 @@ def oracle_sql() -> dict[str, str]:
                        try_strptime(expiry_date_raw, '%Y-%m-%d %H:%M:%S'),
                        try_strptime(expiry_date_raw, '%d-%b-%Y'))::date AS expiry_date,
               registrar
-            FROM read_parquet('{_FIX}/whois.parquet')
+            FROM read_parquet('{FIXDIR}/whois.parquet')
         """,
         "q_ssl_join": f"""
             WITH doms AS (
-              SELECT domain FROM read_parquet('{_FIX}/dns.parquet')
+              SELECT domain FROM read_parquet('{FIXDIR}/dns.parquet')
               UNION ALL
               SELECT 'missing-' || i || '.example' FROM range(5) t(i))
             SELECT d.domain AS domain_name,
               coalesce(s.ssl_valid, false) AS ssl_valid,
               s.ssl_expiry
             FROM doms d
-            LEFT JOIN read_parquet('{_FIX}/ssl.parquet') s
+            LEFT JOIN read_parquet('{FIXDIR}/ssl.parquet') s
               ON d.domain = s.domain
         """,
         "q_geo_join": f"""
             WITH doms AS (
-              SELECT domain FROM read_parquet('{_FIX}/dns.parquet')
+              SELECT domain FROM read_parquet('{FIXDIR}/dns.parquet')
               UNION ALL
               SELECT 'missing-' || i || '.example' FROM range(5) t(i))
             SELECT d.domain AS domain_name, n.ip_address,
@@ -1557,9 +1555,9 @@ def oracle_sql() -> dict[str, str]:
               round(g.longitude::double, 6) AS longitude,
               g.country
             FROM doms d
-            LEFT JOIN read_parquet('{_FIX}/dns.parquet') n
+            LEFT JOIN read_parquet('{FIXDIR}/dns.parquet') n
               ON d.domain = n.domain
-            LEFT JOIN read_parquet('{_FIX}/geo.parquet') g
+            LEFT JOIN read_parquet('{FIXDIR}/geo.parquet') g
               ON n.ip_address = g.ip_address
         """,
         "q_dns_parent_fallback": f"""
@@ -1569,12 +1567,12 @@ def oracle_sql() -> dict[str, str]:
                      THEN array_to_string(string_split(domain, '.')[-2:], '.')
                      ELSE domain END AS main_domain,
                 nameservers
-              FROM read_parquet('{_FIX}/dns.parquet'))
+              FROM read_parquet('{FIXDIR}/dns.parquet'))
             SELECT d.domain,
               coalesce(array_to_string(
                 coalesce(coalesce(d.nameservers, p.nameservers), []), ','), '')
                 AS nameservers_csv
-            FROM d LEFT JOIN read_parquet('{_FIX}/dns.parquet') p
+            FROM d LEFT JOIN read_parquet('{FIXDIR}/dns.parquet') p
               ON d.main_domain = p.domain
         """,
         "q_redirect_classify": f"""
@@ -1584,7 +1582,7 @@ def oracle_sql() -> dict[str, str]:
                 regexp_replace(lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^www\\.', '') AS od,
                 lower(regexp_extract(coalesce(final_url,''), '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS fscheme,
                 regexp_replace(lower(regexp_extract(coalesce(final_url,''), '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^www\\.', '') AS fd
-              FROM read_parquet('{_FIX}/redirects.parquet'))
+              FROM read_parquet('{FIXDIR}/redirects.parquet'))
             SELECT url, final_url, status_code, fd AS final_domain,
               (status_code >= 300 AND status_code < 400 AND fd <> '' AND fd <> od
                AND NOT (fd = od AND oscheme <> fscheme)) AS is_redirect
@@ -1594,7 +1592,7 @@ def oracle_sql() -> dict[str, str]:
             WITH l AS (
               SELECT src_domain, pos, href,
                 regexp_replace(lower(regexp_extract(href, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^www\\.', '') AS target_domain
-              FROM read_parquet('{_FIX}/link_candidates.parquet')),
+              FROM read_parquet('{FIXDIR}/link_candidates.parquet')),
             f AS (SELECT * FROM l WHERE target_domain <> ''),
             d AS (SELECT *, row_number() OVER (
                     PARTITION BY src_domain, target_domain ORDER BY pos) AS rn FROM f),
@@ -1778,7 +1776,7 @@ def oracle_sql() -> dict[str, str]:
                        THEN coalesce(asn,'AS0')
                      WHEN substring(md5(domain),1,1) < 'd' THEN ''
                      ELSE '   ' END AS org
-              FROM read_parquet('{_FIX}/dns.parquet'))
+              FROM read_parquet('{FIXDIR}/dns.parquet'))
             SELECT domain, org, {_sql_asn_fields("org")}
             FROM d
         """,

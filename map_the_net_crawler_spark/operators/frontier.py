@@ -12,6 +12,11 @@ parallelism level (SURVEY.md §7.3 hard part 1).
 Within-batch sequential effects of the reference's per-item loop
 (process_queue, domain_collector.py:1360-1412) are reproduced with rank
 windows instead of sequential execution — see ``apply_claim_gates``.
+
+Discovered URLs enter the frontier through ``merge_discoveries``, which
+numbers them by ``sequence_by_source``: every step of that plan is
+bounded by one source's links (the link caps) or by one row per source
+(≤ k), at any batch size, and building it starts no Spark job.
 """
 
 from __future__ import annotations
@@ -175,13 +180,12 @@ def apply_claim_gates(claimed: DataFrame, seen_counts: DataFrame,
 
 def merge_discoveries(frontier: DataFrame, discoveries: DataFrame,
                       seen_counts: DataFrame, processed_domains: DataFrame,
-                      cfg: CrawlConfig, next_seq: int,
-                      iteration: int, rows_hint: int | None = None,
-                      materializer=None) -> DataFrame:
+                      cfg: CrawlConfig, next_seq: int) -> DataFrame:
     """add_discovered_urls_to_queue (domain_collector.py:1314-1348) as a
     batch merge.
 
-    discoveries: (clean_url, target_domain, src_depth, source_rank, link_pos)
+    discoveries: (clean_url, target_domain, source_domain, src_depth,
+    source_rank, is_internal, link_pos)
     processed_domains: (domain_name, batch_rank, records_history) — the
     domains processed this iteration, for sequential quota visibility.
 
@@ -197,8 +201,9 @@ def merge_discoveries(frontier: DataFrame, discoveries: DataFrame,
     - enqueue-time quota: history count of the TARGET domain at the time
       the source item ran == seen_cnt + 1[target processed earlier in
       this batch with history recording];
-    - discovery_seq continues the global insertion counter, preserving
-      MySQL-id claim-order ties across iterations.
+    - discovery_seq continues the global insertion counter from
+      ``next_seq`` (``sequence_by_source``), preserving MySQL-id
+      claim-order ties across iterations.
 
     Returns new pending frontier rows.
     """
@@ -236,21 +241,7 @@ def merge_discoveries(frontier: DataFrame, discoveries: DataFrame,
     fresh = firsts.join(frontier.select(F.col("url").alias("clean_url")),
                         "clean_url", "left_anti")
 
-    seq_order = [*enqueue_order, F.col("clean_url").asc()]
-    # F-term: assign_global_sequence sizes its plan with a count — over
-    # THIS whole subtree (first-wins window + quota joins + frontier
-    # anti-join) if handed the lazy frame.  Callers either pass
-    # ``materializer`` (df -> (scratch-backed df, exact rows): one pass
-    # snapshots the survivors with the count observed on the same write,
-    # and sequencing + the frontier-delta union downstream reuse the
-    # cheap scan) or ``rows_hint`` (an upper bound ≥ |fresh|; only used
-    # when it cannot flip the plan away from the one the exact count
-    # would pick).
-    n_hint = rows_hint
-    if materializer is not None:
-        fresh, n_hint = materializer(fresh)
-    return (assign_global_sequence(fresh, seq_order, next_seq,
-                                   rows_hint=n_hint)
+    return (sequence_by_source(fresh, next_seq)
             .select(
                 F.col("clean_url").alias("url"),
                 F.col("target_domain").alias("domain_name"),
@@ -267,54 +258,42 @@ def merge_discoveries(frontier: DataFrame, discoveries: DataFrame,
             ))
 
 
-def assign_global_sequence(df: DataFrame, order_cols: list,
-                           start: int, small_threshold: int = 50_000,
-                           rows_hint: int | None = None) -> DataFrame:
-    """Assign a dense global sequence ``discovery_seq`` following a total
-    order, without a single-task global window.
+def sequence_by_source(df: DataFrame, start: int) -> DataFrame:
+    """Number ``df``'s rows with the dense ``discovery_seq`` from
+    ``start`` in enqueue order ``(source_rank, is_internal desc,
+    link_pos, clean_url)``, every step bounded at any batch size.
 
-    Two-phase (the classic zipWithIndex shape, in DataFrame space):
-    range-partition by the order keys → per-partition counts → cumulative
-    offsets (a tiny driver-side map literal) → offset + intra-partition
-    row_number.  The result depends only on the total ORDER, not on the
-    partition bounds, so it is identical at any parallelism — the
-    property the crawl-order determinism tests pin (SURVEY.md §7.3).
+    A source is one batch rank, and the link caps hold it to
+    ``max_links_per_page`` rows, so a row's position within its source
+    is a window partitioned by ``source_rank``.  The source's offset is
+    the exclusive running sum of the per-source counts: a window over
+    one row per source (≤ k rows, the bound of the claim's own rank
+    window), broadcast back.  No count, collect or range sample runs.
 
-    Falls back to one global window when the input is tiny (cheaper: no
-    extra shuffle, same result — order_cols must be a total order).
-
-    ``rows_hint``: a caller-known UPPER BOUND on the row count.  Both
-    branches produce the identical mapping at any actual size, so the
-    bound only picks the cheaper plan — and skips this function's own
-    sizing count, which re-executes the caller's whole upstream subtree
-    (for merge_discoveries: the first-wins window + quota joins +
-    frontier anti-join) just to choose a branch (F-term)."""
-    n = rows_hint if rows_hint is not None else df.count()
-    if n == 0:
-        return df.withColumn("discovery_seq", F.lit(start).cast("long"))
-    if n <= small_threshold:
-        w = Window.orderBy(*order_cols)
-        return df.withColumn(
-            "discovery_seq",
-            (F.lit(start) + F.row_number().over(w) - 1).cast("long"))
-    sc = df.sparkSession.sparkContext
-    p = max(2, sc.defaultParallelism)
-    ranged = (df.repartitionByRange(p, *order_cols)
-              .withColumn("_pid", F.spark_partition_id()))
-    counts = {r["_pid"]: r["cnt"] for r in
-              ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    # the offsets ride the plan as a literal map Column: a local table
-    # here would be a Python-backed RDD plus a broadcast join
-    pairs, acc = [], start
-    for pid in sorted(counts):
-        pairs += [F.lit(pid), F.lit(acc).cast("long")]
-        acc += counts[pid]
-    off = F.element_at(F.create_map(*pairs), F.col("_pid"))
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (ranged
+    The counts aggregate the ranked frame, which the window has already
+    hash-partitioned on ``source_rank``, so the offsets branch re-reads
+    that exchange instead of re-running the merge subtree below it.
+    Spark reuses an exchange only if both branches plan it identically,
+    hence two choices below: the count is taken as the max of a struct
+    over every column (a branch that read fewer columns would be pruned
+    down to a different exchange), and the join is a left join (an inner
+    join adds a not-null filter under the exchange on one side only)."""
+    w_src = Window.partitionBy("source_rank").orderBy(
+        F.col("is_internal").desc(), F.col("link_pos").asc(),
+        F.col("clean_url").asc())
+    ranked = df.withColumn("_pos", F.row_number().over(w_src))
+    w_prev = (Window.orderBy("source_rank")
+              .rowsBetween(Window.unboundedPreceding, -1))
+    offsets = (ranked.groupBy("source_rank")
+               .agg(F.max(F.struct("_pos", *df.columns))["_pos"]
+                    .alias("_n"))
+               .select("source_rank", F.sum("_n").over(w_prev).alias("_off")))
+    # _off is null for the first source only: every source has a row
+    return (ranked.join(F.broadcast(offsets), "source_rank", "left")
             .withColumn("discovery_seq",
-                        (off + F.row_number().over(w) - 1).cast("long"))
-            .drop("_pid"))
+                        (F.lit(start) + F.coalesce("_off", F.lit(0))
+                         + F.col("_pos") - 1).cast("long"))
+            .drop("_pos", "_off"))
 
 
 def merge_frontier_upsert(frontier: DataFrame, new_rows: DataFrame) -> DataFrame:

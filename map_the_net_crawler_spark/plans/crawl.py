@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas as S
@@ -26,14 +26,21 @@ from .iteration import CrawlInputs, IterationResult, run_iteration
 
 def init_run(spark: SparkSession, tio: TableIO, seeds: DataFrame) -> int:
     """Seed ingestion (S15, queue_processor.py:83-98): seeds become
-    pending frontier rows; all other tables start empty."""
+    pending frontier rows; all other tables start empty.  The seeds' max
+    ``discovery_seq`` rides the frontier write as an Observation, so the
+    sequence counter costs no job of its own."""
+    obs = Observation()
     seeds = seeds.select(*[f.name for f in S.FRONTIER.fields])
-    tio.write("frontier", seeds, 0)
+    tio.write("frontier", seeds.observe(
+        obs, F.max("discovery_seq").alias("max_seq")), 0)
     tio.write("seen", empty_frame(spark, S.SEEN), 0)
     tio.write("nodes", empty_frame(spark, S.NODES), 0)
     tio.write("edges", empty_frame(spark, S.EDGES), 0)
     tio.write("metrics", empty_frame(spark, S.METRICS), 0)
-    next_seq = (seeds.agg(F.max("discovery_seq")).collect()[0][0] or -1) + 1
+    # a plan that ran no task (seeds with no partitions, e.g. a scan
+    # whose files were all pruned) reports an empty metrics row: no seeds
+    max_seq = obs.get["max_seq"] if obs._jo.getRow().length() else None
+    next_seq = 0 if max_seq is None else max_seq + 1
     tio.write_meta({"iteration": 0, "next_seq": next_seq})
     return next_seq
 

@@ -45,12 +45,6 @@ from ..operators.seen import seen_counts_pruned
 from ..psl import naive_main_domain
 from ..storage import TableIO, bucket_of
 
-# snapshot the discovery anti-join survivors (fresh_links) only above
-# this many extracted link rows: big batches pay one write so the
-# sequencing count and the new_pending write reuse its scan; small
-# batches skip the write job and pass n_links as the plan hint.  Keys
-# off the PRE-filter link count the extract write already observes.
-_FRESH_LINKS_SNAPSHOT_MIN_ROWS = 20_000
 
 @dataclass
 class CrawlInputs:
@@ -349,7 +343,7 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # the batch across all cores before the Arrow stage.  robots_ok rides
     # along for the pass's category/tags masking
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # processed-domain and link counts ride the extract WRITE: each batch
+    # the processed-domain count rides the extract WRITE: each batch
     # domain yields exactly one metadata row (link_pos == -1), so n_meta
     # == countDistinct(domain) with gate_status='process'.  The surviving
     # links' target domains and their seen buckets ride it too (a
@@ -372,8 +366,6 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
         .observe(obs_e,
                  F.sum(F.when(F.col("link_pos") == -1, 1).otherwise(0))
                  .alias("n_meta"),
-                 F.sum(F.when(F.col("link_pos") >= 0, 1).otherwise(0))
-                 .alias("n_links"),
                  _key_set("target_domain",
                           (F.col("link_pos") >= 0) & F.col("_link_ok"), nb)
                  .alias("tgt"))
@@ -382,7 +374,6 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     extracted = tio.read("extract", version=iteration)
     em = obs_e.get
     n_proc = int(em["n_meta"] or 0)
-    n_links = int(em["n_links"] or 0)
 
     binfo = batch.select("domain_name", "batch_rank", "depth", "robots_ok",
                          F.col("seen_cnt").alias("_start_cnt"))
@@ -643,29 +634,9 @@ def _run_iteration_impl(spark: SparkSession, tio: TableIO,
     # bucket-pruned to the candidates' own buckets (bit-identical — a
     # candidate can only collide inside its bucket); merge_discoveries
     # uses the frontier ONLY as that url key set
-    # sizing for merge_discoveries' sequencing plan without an extra
-    # count action over its subtree (F-term): big batches snapshot the
-    # anti-join survivors once (exact count rides the write as an
-    # Observation; sequencing + the new_pending write reuse the scan);
-    # small batches pass n_links (≥ |fresh|) as the plan hint — below
-    # the sequencer's small_threshold it provably picks the same plan
-    # the exact count would
-    def _mat_fresh(df):
-        obs_f = Observation()
-        tio.write("fresh_links",
-                  df.observe(obs_f, F.count(F.lit(1)).alias("n")),
-                  iteration)
-        return (tio.read("fresh_links", version=iteration),
-                int(obs_f.get["n"] or 0))
-
-    big_batch = n_links > _FRESH_LINKS_SNAPSHOT_MIN_ROWS
     new_pending = merge_discoveries(frontier_keys_view, discoveries,
-                                    scounts_targets,
-                                    processed_domains, cfg, next_seq,
-                                    iteration,
-                                    rows_hint=None if big_batch else n_links,
-                                    materializer=_mat_fresh if big_batch
-                                    else None) \
+                                    scounts_targets, processed_domains,
+                                    cfg, next_seq) \
         .observe(obs_p, F.count(F.lit(1)).alias("n"))
     tio.write("new_pending", new_pending, iteration)
     tmr.lap("new_pending_write")

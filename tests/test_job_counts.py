@@ -18,6 +18,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from map_the_net_crawler_spark import schemas as S
+from map_the_net_crawler_spark.config import CrawlConfig
 from map_the_net_crawler_spark.operators.frontier import DISCOVERY_TS_BASE
 from map_the_net_crawler_spark.plans.crawl import init_run
 from map_the_net_crawler_spark.storage import TableIO, bucket_of
@@ -49,6 +50,18 @@ def _job_stages(spark, fn) -> list[list[str]]:
     return [[st.getStageInfo(s).name for s in ids
              if st.getStageInfo(s) is not None]
             for ids in _job_stage_ids(spark, fn)]
+
+
+def _ran_stage_ids(spark, jobs: list[list[int]]) -> list[int]:
+    """The stages of ``jobs`` that ran tasks.  A job also lists the
+    stages it found already computed by an earlier job; Spark marks them
+    skipped and drops them first from its status store once
+    ``spark.ui.retainedStages`` is passed, so their operation graphs may
+    be gone."""
+    st = spark.sparkContext.statusTracker()
+    return [s for ids in jobs for s in ids
+            if (info := st.getStageInfo(s)) is not None
+            and info.numCompletedTasks > 0]
 
 
 def _stage_rdd_ops(spark, stage_id: int) -> set[str]:
@@ -190,6 +203,52 @@ class TestNoFixedJobs:
         assert sorted(map(tuple, tio.read_state(
             "frontier", version=2, schema=S.FRONTIER).collect())) == before
 
+    def test_merge_discoveries_builds_without_a_job(self, spark):
+        """Sequencing new frontier rows is part of the plan: building it
+        runs no sizing count, range sample or offsets collect."""
+        from map_the_net_crawler_spark.operators.frontier import \
+            merge_discoveries
+        front = _frontier(spark, 50)
+        disc = spark.range(400).select(
+            F.concat(F.lit("http://t"), F.col("id") % 97, F.lit(".com/"))
+            .alias("clean_url"),
+            F.concat(F.lit("t"), F.col("id") % 97, F.lit(".com"))
+            .alias("target_domain"),
+            F.concat(F.lit("d"), F.col("id") % 9, F.lit(".com"))
+            .alias("source_domain"),
+            F.lit(0).alias("src_depth"),
+            (F.col("id") % 9).cast("int").alias("source_rank"),
+            (F.col("id") % 40).cast("int").alias("link_pos"),
+            (F.col("id") % 2 == 0).alias("is_internal"))
+        seen = front.select("domain_name", F.lit(1).alias("seen_cnt"))
+        procd = front.select("domain_name",
+                             F.lit(1).alias("batch_rank"),
+                             F.lit(True).alias("records_history"))
+        got = []
+        assert _job_stages(spark, lambda: got.append(merge_discoveries(
+            front, disc, seen, procd, CrawlConfig(), next_seq=7))) == []
+        seqs = sorted(r.discovery_seq for r in got[0].collect())
+        assert seqs == list(range(7, 7 + len(seqs))) and seqs
+
+    def test_init_run_starts_no_collect(self, spark):
+        """The next sequence number rides the seed write: init_run runs
+        no collect, with seeds, with an empty seed frame, and with seeds
+        that have no partitions at all."""
+        cases = [(_frontier(spark, 30, seq0=5), 35),
+                 (_frontier(spark, 0), 0),
+                 (spark.createDataFrame([], S.FRONTIER), 0)]
+        for seeds, want in cases:
+            tio = TableIO(tempfile.mkdtemp(prefix="mtn_init_"), spark,
+                          num_buckets=8)
+            got = []
+            jobs = _job_stages(spark, lambda: got.append(
+                init_run(spark, tio, seeds)))
+            collects = [n for stages in jobs for n in stages
+                        if n.startswith("collect at")]
+            assert collects == [], jobs
+            assert got == [want]
+            assert tio.read_meta()["next_seq"] == want
+
 
 def _metrics_row(spark):
     return spark.range(1).select(
@@ -218,7 +277,7 @@ class TestEmptyReads:
             .alias("domain_name"))
         jobs = _job_stage_ids(spark, lambda: probe.join(
             df, "domain_name", "left").collect())
-        ops = [_stage_rdd_ops(spark, s) for ids in jobs for s in ids]
+        ops = [_stage_rdd_ops(spark, s) for s in _ran_stage_ids(spark, jobs)]
         assert ops, "the probe side runs"
         assert not [o for o in ops if {"parallelize", "PythonRDD"} & o], ops
 
@@ -373,6 +432,6 @@ class TestDedupJobs:
         rows = []
         run = _job_stage_ids(spark, lambda: rows.extend(got[0].collect()))
         assert rows
-        kernel = [s for ids in call + run for s in ids
+        kernel = [s for s in _ran_stage_ids(spark, call + run)
                   if {"MapInPandas", "PythonRDD"} & _stage_rdd_ops(spark, s)]
         assert len(kernel) == 1, kernel

@@ -314,7 +314,6 @@ class TestOracleWhitespace:
             "pos": np.arange(5, dtype=np.int64),
         }).to_parquet(tmp_path / "link_candidates.parquet")
         monkeypatch.setattr(E, "FIXDIR", str(tmp_path))
-        monkeypatch.setattr(E, "_FIX", str(tmp_path))
         con = duckdb.connect()
         sql, ops = E.oracle_sql(), E.queries()
         got = {}

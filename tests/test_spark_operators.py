@@ -129,130 +129,170 @@ class TestClaim:
         assert out[0].priority == 5 and out[0].depth == 1   # database.py:321-323
 
 
-class TestGlobalSequence:
-    def test_ranged_path_equals_window_path(self, spark):
-        """assign_global_sequence must produce the identical mapping via
-        the single-window path and the range-partitioned two-phase path
-        (scale path), at any parallelism."""
-        from map_the_net_crawler_spark.operators.frontier import \
-            assign_global_sequence
-        import pandas as pd
-        rows = pd.DataFrame({
-            "clean_url": [f"http://d{i % 37}.com/p{i}" for i in range(997)],
-            "source_rank": [i % 11 for i in range(997)],
-            "is_internal": [bool(i % 2) for i in range(997)],
-            "link_pos": [i % 53 for i in range(997)],
-        })
-        df = spark.createDataFrame(rows).repartition(7)
-        order = [F.col("source_rank").asc(), F.col("is_internal").desc(),
-                 F.col("link_pos").asc(), F.col("clean_url").asc()]
-        small = {r.clean_url: r.discovery_seq for r in
-                 assign_global_sequence(df, order, 100,
-                                        small_threshold=10**9).collect()}
-        ranged = {r.clean_url: r.discovery_seq for r in
-                  assign_global_sequence(df, order, 100,
-                                         small_threshold=1).collect()}
-        assert small == ranged
-        assert sorted(small.values()) == list(range(100, 100 + 997))
+_DISC_SCHEMA = ("clean_url string, target_domain string, "
+                "source_domain string, src_depth int, source_rank int, "
+                "link_pos int, is_internal boolean")
 
-    def test_ranged_path_runs_no_python_table(self, spark):
-        """The two-phase path's per-partition offsets ride the plan as a
-        literal map: no Python-backed local table (``ExistingRDD``) and
-        no broadcast join, with the window path's mapping."""
-        from map_the_net_crawler_spark.operators.frontier import \
-            assign_global_sequence
-        n = 997
-        df = spark.range(n).select(
-            F.concat(F.lit("http://d"), F.col("id") % 37, F.lit(".com/p"),
-                     F.col("id")).alias("clean_url"),
-            (F.col("id") % 11).cast("int").alias("source_rank"),
-            (F.col("id") % 2 == 1).alias("is_internal"),
-            (F.col("id") % 53).cast("int").alias("link_pos")) \
-            .repartition(7)
-        order = [F.col("source_rank").asc(), F.col("is_internal").desc(),
-                 F.col("link_pos").asc(), F.col("clean_url").asc()]
-        ranged = assign_global_sequence(df, order, 100, small_threshold=1)
-        plans = ranged._jdf.queryExecution().toString()
-        assert "ExistingRDD" not in plans and "LogicalRDD" not in plans
-        assert "BroadcastExchange" not in plans
-        small = assign_global_sequence(df, order, 100,
-                                       small_threshold=10**9)
-        got = {r.clean_url: r.discovery_seq for r in ranged.collect()}
-        assert got == {r.clean_url: r.discovery_seq
-                       for r in small.collect()}
-        assert sorted(got.values()) == list(range(100, 100 + n))
-        # an upper-bound hint over an empty input takes the ranged path
-        # with no offsets at all
-        empty = assign_global_sequence(df.limit(0), order, 100,
-                                       small_threshold=1, rows_hint=n)
-        assert empty.collect() == []
 
-    def test_rows_hint_skips_count_same_mapping(self, spark):
-        """rows_hint (an upper bound) must give the identical mapping as
-        the exact-count plan pick on both sides of the threshold."""
-        from map_the_net_crawler_spark.operators.frontier import \
-            assign_global_sequence
-        import pandas as pd
-        rows = pd.DataFrame({
-            "clean_url": [f"http://d{i % 7}.com/p{i}" for i in range(211)],
-            "source_rank": [i % 5 for i in range(211)],
-            "is_internal": [bool(i % 2) for i in range(211)],
-            "link_pos": [i % 13 for i in range(211)],
-        })
-        df = spark.createDataFrame(rows).repartition(5)
-        order = [F.col("source_rank").asc(), F.col("is_internal").desc(),
-                 F.col("link_pos").asc(), F.col("clean_url").asc()]
-        exact = {r.clean_url: r.discovery_seq for r in
-                 assign_global_sequence(df, order, 7).collect()}
-        hint_small = {r.clean_url: r.discovery_seq for r in
-                      assign_global_sequence(df, order, 7,
-                                             rows_hint=5000).collect()}
-        hint_big = {r.clean_url: r.discovery_seq for r in
-                    assign_global_sequence(df, order, 7, small_threshold=50,
-                                           rows_hint=5000).collect()}
-        assert exact == hint_small == hint_big
+def _disc_row(rank: int, pos: int, internal: bool, url: str) -> tuple:
+    return (url, url.split("/")[2], f"src{rank}.com", rank % 3, rank, pos,
+            internal)
 
-    def test_merge_discoveries_materializer_identity(self, spark, tmp_path):
-        """merge_discoveries with a scratch-snapshot materializer (the
-        big-batch F-term path) returns row-identical new-pending output
-        to the default count-sized path."""
-        from map_the_net_crawler_spark.config import CrawlConfig
+
+def _python_merge(rows: list[tuple], frontier_urls: set[str],
+                  next_seq: int) -> dict[str, int]:
+    """merge_discoveries restated in Python for inputs with no quota in
+    play: each URL's first finding (earlier source, internal before
+    external, earlier position) unless the frontier holds it, numbered
+    densely from ``next_seq`` in enqueue order."""
+    def order(r):
+        url, _t, _s, _d, rank, pos, internal = r
+        return (rank, not internal, pos, url)
+    first = {}
+    for r in sorted(rows, key=order):
+        first.setdefault(r[0], r)
+    fresh = sorted((r for u, r in first.items() if u not in frontier_urls),
+                   key=order)
+    return {r[0]: next_seq + i for i, r in enumerate(fresh)}
+
+
+class TestSequenceBySource:
+    """``merge_discoveries`` numbers new frontier rows with one plan: a
+    window per source plus a running sum over one row per source.  Each
+    case checks ``(url, discovery_seq)`` against a Python sort of the
+    same rows."""
+
+    def _merge(self, spark, rows, frontier_urls=(), next_seq=500,
+               partitions=1):
         from map_the_net_crawler_spark.operators.frontier import \
             merge_discoveries
-        cfg = CrawlConfig()
+        disc = spark.createDataFrame(rows, _DISC_SCHEMA)
+        if rows:
+            disc = disc.repartition(partitions)
+        # a pandas frame is a local relation the planner can size, so
+        # the frontier side of the anti-join is broadcast as in a crawl
         frontier = spark.createDataFrame(
-            [("http://d0.com/p0",), ("http://d1.com/p3",)], "url string")
-        disc = spark.createDataFrame(
-            [(f"http://d{i % 9}.com/p{i}", f"d{i % 9}.com", f"s{i % 4}.com",
-              0, i % 4, i % 17, bool(i % 2)) for i in range(400)],
-            "clean_url string, target_domain string, source_domain string, "
-            "src_depth int, source_rank int, link_pos int, is_internal boolean")
-        seen = spark.createDataFrame([("d1.com", 1)],
-                                     "domain_name string, seen_cnt int")
+            pd.DataFrame({"url": list(frontier_urls)}, dtype=object),
+            "url string")
+        seen = spark.createDataFrame([], "domain_name string, seen_cnt int")
         procd = spark.createDataFrame(
-            [("d2.com", 0, True)],
-            "domain_name string, batch_rank int, records_history boolean")
+            [], "domain_name string, batch_rank int, records_history boolean")
+        return merge_discoveries(frontier, disc, seen, procd, CrawlConfig(),
+                                 next_seq=next_seq)
 
-        def run(materializer):
-            out = merge_discoveries(frontier, disc, seen, procd, cfg,
-                                    next_seq=500, iteration=3,
-                                    materializer=materializer)
-            return sorted(map(tuple, out.collect()))
+    def _check(self, spark, rows, frontier_urls=(), partitions=1):
+        out = self._merge(spark, rows, frontier_urls, partitions=partitions)
+        got = {r.url: r.discovery_seq for r in out.collect()}
+        assert got == _python_merge(rows, set(frontier_urls), 500)
+        return out
 
-        calls = []
+    def _many_sources(self):
+        """40 sources with 1-30 links each; URLs repeat across sources,
+        and every 7th URL is already in the frontier."""
+        rows = []
+        for rank in range(1, 41):
+            for pos in range(1 + (rank * 7) % 30):
+                rows.append(_disc_row(rank, pos, (rank + pos) % 3 == 0,
+                                      f"http://t{(rank * pos) % 53}.com/"
+                                      f"p{(rank + pos) % 41}"))
+        frontier = sorted({r[0] for r in rows[::7]})
+        return rows, frontier
 
-        def mat(df):
-            p = str(tmp_path / f"fresh_{len(calls)}")
-            df.write.mode("overwrite").parquet(p)
-            out = spark.read.parquet(p)
-            calls.append(p)
-            return out, out.count()
+    def test_many_sources_over_several_partitions(self, spark):
+        rows, frontier = self._many_sources()
+        out = self._check(spark, rows, frontier, partitions=5)
+        assert out.count() > 100
 
-        plain = run(None)
-        snap = run(mat)
-        assert calls, "materializer engaged"
-        assert plain == snap
-        assert len(plain) > 0
+    def test_source_at_link_cap(self, spark):
+        cfg = CrawlConfig()
+        rows = [_disc_row(2, p, True, f"http://src2.com/i{p}")
+                for p in range(cfg.max_internal_links)]
+        rows += [_disc_row(2, p, False, f"http://x{p}.org/")
+                 for p in range(cfg.max_external_links)]
+        rows += [_disc_row(1, 0, False, "http://first.org/"),
+                 _disc_row(3, 0, False, "http://last.org/")]
+        out = self._check(spark, rows, partitions=3)
+        seq = {r.url: r.discovery_seq for r in out.collect()}
+        assert seq["http://first.org/"] == 500
+        assert seq["http://last.org/"] == 500 + 1 + cfg.max_links_per_page
+
+    def test_link_pos_tie_puts_internal_first(self, spark):
+        rows = [_disc_row(1, p, internal, f"http://{kind}{p}.com/")
+                for p in range(4)
+                for internal, kind in ((False, "ext"), (True, "int"))]
+        out = self._check(spark, rows, partitions=2)
+        order = [r.url for r in out.orderBy("discovery_seq").collect()]
+        assert order[:2] == ["http://int0.com/", "http://int1.com/"]
+
+    def test_url_found_twice_keeps_earlier_source(self, spark):
+        rows = [_disc_row(5, 0, False, "http://shared.com/"),
+                _disc_row(5, 1, False, "http://five.com/"),
+                _disc_row(2, 3, False, "http://shared.com/"),
+                _disc_row(2, 0, False, "http://two.com/")]
+        out = self._check(spark, rows, partitions=2)
+        got = {r.url: (r.discovery_seq, r.source_domain)
+               for r in out.collect()}
+        assert got["http://shared.com/"] == (501, "src2.com")
+
+    def test_empty_input_gives_no_rows(self, spark):
+        assert self._merge(spark, []).collect() == []
+
+    def test_same_sequence_at_any_shuffle_partitions(self, spark):
+        rows, frontier = self._many_sources()
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        got = []
+        try:
+            for n in ("1", "7"):
+                spark.conf.set(key, n)
+                got.append(sorted(map(tuple, self._merge(
+                    spark, rows, frontier, partitions=3).collect())))
+        finally:
+            spark.conf.set(key, old)
+        assert got[0] == got[1] and got[0]
+
+    def test_no_unpartitioned_window_over_rows(self, spark):
+        """The only window without a partition key runs over the
+        per-source counts (one row per source), and the counts re-read
+        the exchange of the per-source window: the merge subtree below
+        it runs once."""
+        import re
+        rows, frontier = self._many_sources()
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "7")
+            out = self._merge(spark, rows, frontier, partitions=3)
+            out.collect()
+        finally:
+            spark.conf.set(key, old)
+        qe = out._jdf.queryExecution()
+        todo, global_windows = [qe.optimizedPlan()], []
+        while todo:
+            node = todo.pop()
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+            if (node.getClass().getSimpleName() == "Window"
+                    and node.partitionSpec().isEmpty()):
+                global_windows.append(node)
+        assert len(global_windows) == 1
+        child = global_windows[0].child()
+        while child.getClass().getSimpleName() in ("Project", "Sort",
+                                                   "Filter"):
+            child = child.child()
+        assert child.getClass().getSimpleName() == "Aggregate"
+        grouping = child.groupingExpressions()
+        assert grouping.size() == 1
+        assert grouping.apply(0).toString().startswith("source_rank")
+        # the final plan prints a reused exchange without its subtree:
+        # one planned exchange per key means nothing below ran twice
+        plan = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+        for k in ("source_rank", "clean_url"):
+            planned = re.findall(rf"\+- Exchange hashpartitioning\({k}",
+                                 plan)
+            assert len(planned) == 1, (k, plan)
+        assert re.search(r"ReusedExchange .*hashpartitioning\(source_rank",
+                         plan), plan
 
 
 class TestExtractUdf:
